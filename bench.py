@@ -144,7 +144,7 @@ def crawl_corpus(cores: int, site: dict, corpus_path: str) -> dict:
                           # codec-compressed — columnar-cache compression
                           # on them doubles cache-build time at every core
                           # count for ~no space (measured:
-                          # engine.crawl._heavy_cache_level docstring)
+                          # engine.crawl._HEAVY_CACHE comment)
                           "spark.sql.inMemoryColumnarStorage.compressed":
                           cache_compressed,
                           # shuffle files + cache overflow on fast scratch,

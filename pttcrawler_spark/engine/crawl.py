@@ -42,12 +42,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
-import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,43 +57,31 @@ from . import state as ST
 from . import taskmetrics as TM
 from . import verify as V
 
-_DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
+# Storage level for the per-batch HEAVY caches (raw html + image payload
+# columns): written once, read by every consumer job in the batch,
+# unpersisted at batch end. HOW the blocks are built matters more than where
+# they live (all measured on the scaling corpus, 172k-URL steady batches, G1):
+# - in-memory columnar CACHE COMPRESSION on image payload bytes is pure
+#   waste (they are already codec-compressed): cache build 2x slower at
+#   every core count. Payload-heavy sessions should set
+#   spark.sql.inMemoryColumnarStorage.compressed=false (bench does).
+# - an ADAPTIVE (unbounded) G1 young gen re-copies the GBs of surviving
+#   cache blocks on every young pause: 2.3 s pauses, 50-80 % of task time
+#   in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10)
+#   promotes the blocks once and cuts GC wall ~6x.
+# - OFF_HEAP (tried as the GC fix before the two findings above) builds
+#   blocks ~2x slower than on-heap uncompressed (an extra serialization
+#   pass into Unsafe buffers) and lost end-to-end once young-gen was
+#   bounded: steady batch 49.5 s vs 25.4 s at local[32].
+_HEAVY_CACHE = StorageLevel.MEMORY_AND_DISK
 
-from pyspark import StorageLevel as _SL
-
-
-def _heavy_cache_level(spark) -> "_SL":
-    """Storage level for the per-batch HEAVY caches (raw html + image
-    payload columns): written once, read by every consumer job in the
-    batch, unpersisted at batch end. Default MEMORY_AND_DISK — but HOW the
-    blocks are built matters more than where they live (all measured on the
-    scaling corpus, 172k-URL steady batches, G1):
-
-    - in-memory columnar CACHE COMPRESSION on image payload bytes is pure
-      waste (they are already codec-compressed): cache build 2x slower at
-      every core count. Payload-heavy sessions should set
-      spark.sql.inMemoryColumnarStorage.compressed=false (bench does).
-    - an ADAPTIVE (unbounded) G1 young gen re-copies the GBs of surviving
-      cache blocks on every young pause: 2.3 s pauses, 50-80 % of task time
-      in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10)
-      promotes the blocks once and cuts GC wall ~6x.
-    - OFF_HEAP (tried as the GC fix before the two findings above) builds
-      blocks ~2x slower than on-heap uncompressed (an extra serialization
-      pass into Unsafe buffers) and lost end-to-end once young-gen was
-      bounded: steady batch 49.5 s vs 25.4 s at local[32].
-
-    SPARK_GRAFT_HEAVY_CACHE overrides for experiments."""
-    env = os.environ.get("SPARK_GRAFT_HEAVY_CACHE")
-    if env:
-        return getattr(_SL, env)
-    return _SL.MEMORY_AND_DISK
+_COMPACT_EVERY = 64                  # full-frontier compaction cadence (batches)
 
 
 class _Phase:
-    """Per-batch phase timer. Always records into ``times`` (surfaced via
+    """Per-batch phase timer; records into ``times`` (surfaced via
     ``CrawlResult.batch_stats[i]['phase_s']`` — the per-phase scaling
-    evidence in BENCH_SCALING.json); prints per-phase lines when
-    SPARK_GRAFT_DEBUG_TIMING=1."""
+    evidence in BENCH_SCALING.json)."""
 
     def __init__(self) -> None:
         self.t = time.perf_counter()
@@ -103,10 +90,6 @@ class _Phase:
     def mark(self, label: str) -> None:
         now = time.perf_counter()
         self.times[label] = round(self.times.get(label, 0.0) + (now - self.t), 3)
-        if _DEBUG_TIMING:
-            # stderr: bench.py's stdout contract is one JSON line
-            print(f"      [phase] {label}: {now - self.t:.3f}s",
-                  flush=True, file=sys.stderr)
         self.t = now
 
 
@@ -132,36 +115,21 @@ class CrawlConfig:
     start_index: int = 1
     end_index: int | None = None    # CLI --index S E upper bound (crawler_arg.py:44-46)
     max_batches: int = 10_000
-    use_bloom: bool = False         # back-compat alias for seen_filter='bloom'
     seen_filter: str = ""           # '' (exact anti-join) | 'bloom' | 'cuckoo'
     bloom_partitions: int = 16
-    bloom_bits_per_key: int = 16
-    verify_payload: bool = True     # north-rule per-row PSNR/phash/caption check
-    # Run the verify stage as a pipelined FOLLOW-ON job per batch: batch k's
-    # verify reads the COMMITTED images+parsed tables (not the in-memory
-    # cache) and overlaps batch k+1's admit/fetch/parse. Unlike
-    # pipeline_commits this pins no second heavy cache — the verify input is
-    # the just-written parquet — and its output is derived data committed
-    # outside the batch marker (trusted via _SUCCESS, repaired on resume by
+    # North-rule per-row PSNR/phash/caption check, run as a FOLLOW-ON job per
+    # batch: batch k's verify reads the COMMITTED images+parsed tables (not
+    # the in-memory cache) and overlaps batch k+1's admit/fetch/parse. It
+    # pins no heavy cache — the verify input is the just-written parquet —
+    # and its output is derived data committed outside the batch marker
+    # (trusted via _SUCCESS, repaired on resume by
     # engine/verify.repair_missing_verify). Measured at local[32] on the
-    # 860k-URL scaling corpus: the commit barrier drops 12.9 s → ~8 s of an
-    # ~18 s steady batch; batch wall is ~unchanged on THIS host because the
-    # loop is memory-bus-bound (the verify's bytes stream the same bus
-    # either way) — the win here is a halved durability barrier, and on a
-    # real cluster (per-node buses) the overlap is throughput. False = the
-    # verify is a table write inside the commit barrier (round-3 behavior).
-    verify_async: bool = True
-    compact_every: int = 64         # full-frontier compaction cadence (batches)
-    # Overlap batch k's durability writes with batch k+1's compute on a
-    # single-slot background thread. OFF by default: overlapping keeps TWO
-    # batches' heavy caches (html + image payloads) resident at once and
-    # splits the cores between write and compute jobs — measured on the
-    # 860k-URL scaling corpus it cut sustained throughput ~2x at EVERY
-    # level (local[2] 1407→706, local[32] 8454→3523 URLs/s) because the
-    # loop is memory-bound, not commit-latency-bound. Worth enabling only
-    # when commits are genuinely slower than compute AND memory is ample
-    # (e.g. slow object-store sinks on a large cluster).
-    pipeline_commits: bool = False
+    # 860k-URL scaling corpus against the same stage as a write inside the
+    # commit barrier: the barrier drops 12.9 s → ~8 s of an ~18 s steady
+    # batch; batch wall is ~unchanged on THIS host because the loop is
+    # memory-bus-bound — on a real cluster (per-node buses) the overlap is
+    # throughput.
+    verify_payload: bool = True
 
     @property
     def burst(self) -> float:
@@ -252,6 +220,20 @@ def seed_frontier(spark: SparkSession, seeds: list[tuple[str, str]]) -> DataFram
     return _frontier_row_cols(df)
 
 
+def _seen_filter(cfg: CrawlConfig):
+    """The URL-seen pre-filter state ``cfg.seen_filter`` names: None for the
+    exact anti-join alone, else an empty BloomState / CuckooState."""
+    if cfg.seen_filter == "bloom":
+        from ..operators import bloom as BL
+        return BL.BloomState(cfg.bloom_partitions)
+    if cfg.seen_filter == "cuckoo":
+        from ..operators import cuckoo as CK
+        return CK.CuckooState(cfg.bloom_partitions)
+    if cfg.seen_filter:
+        raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
+    return None
+
+
 def _init_politeness(hosts: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return (
         hosts.select("host").distinct()
@@ -298,6 +280,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
     cfg = cfg or CrawlConfig()
     if corpus is None and fetcher is None:
         raise ValueError("need a corpus or a fetcher")
+    bloom = _seen_filter(cfg)
     pages = None if corpus is None else corpus.select(
         "url", "kind", "page_index", F.col("html").alias("_html"),
         "image_bytes", "w", "h", "fmt", "caption", "phash",
@@ -316,27 +299,14 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         politeness = _init_politeness(frontier, cfg)
         batch_id = -1
 
-    heavy_level = _heavy_cache_level(spark)
-    bloom = None
-    filter_kind = cfg.seen_filter or ("bloom" if cfg.use_bloom else "")
-    if filter_kind == "bloom":
-        from ..operators import bloom as BL
-        bloom = BL.BloomState(cfg.bloom_partitions, cfg.bloom_bits_per_key)
-    elif filter_kind == "cuckoo":
-        from ..operators import cuckoo as CK
-        bloom = CK.CuckooState(cfg.bloom_partitions)
-    elif filter_kind:
-        raise ValueError(f"unknown seen_filter {filter_kind!r}")
     if bloom is not None and (snap is None or not bloom.load(out_dir, batch_id)):
         bloom.rebuild(frontier.select("url_hash"))
 
     n_fetched_total = 0
     batches_run = 0
     batch_stats: list[dict] = []
-    tm_before = TM.sample(spark) if TM.ENABLED else None
-    commit_pool = ThreadPoolExecutor(max_workers=1)   # single-slot: sequential markers
-    commit_fut = None
-    commit_caches: list[DataFrame] = []
+    # None unless the Spark UI is up (taskmetrics reads its REST API)
+    tm_before = TM.sample(spark)
     verify_pool = ThreadPoolExecutor(max_workers=1)   # single-slot: sequential verify
     verify_fut = None
 
@@ -346,14 +316,15 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         (backpressure — in steady state verify (~5 s) finishes well inside
         the next batch (~13 s), so the await is normally instant)."""
         nonlocal verify_fut
-        if not (cfg.verify_payload and cfg.verify_async):
+        if not cfg.verify_payload:
             return
         if verify_fut is not None:
             verify_fut.result()
         verify_fut = verify_pool.submit(
             V.verify_committed_batch, spark, out_dir, bid)
     # loop-critical jobs (materialize, checkpoints) share executors FAIRly
-    # with the pipelined commit writes (pool "commit", engine/state.py)
+    # with the commit writes and the previous batch's verify (pool
+    # "commit", engine/state.py and engine/verify.py)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
     while batches_run < cfg.max_batches:
         batches_run += 1
@@ -389,7 +360,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             # real fetch stage (e.g. HTTP mapInPandas, sources/http_fetch):
             # network I/O happens on executors, politeness already bounded
             # the per-host batch upstream
-            fetched = fetcher(admitted).persist(heavy_level)
+            fetched = fetcher(admitted).persist(_HEAVY_CACHE)
         else:
             # simulated fetch: URL → page body. The admitted set (bounded by
             # the politeness budget) is broadcast into the corpus scan, so
@@ -430,7 +401,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                            ("w", "int"), ("h", "int"), ("fmt", "string"),
                            ("caption", "string"), ("phash", "long")]:
                 missing = missing.withColumn(c, F.lit(None).cast(typ))
-            fetched = matched.unionByName(missing).persist(heavy_level)
+            fetched = matched.unionByName(missing).persist(_HEAVY_CACHE)
         ph.mark("admit+fetch(lazy)")
 
         ok = fetched.where(F.col("_html").isNotNull())
@@ -498,7 +469,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             "web_id", FP.web_id_of(F.col("url")))
         parsed_all = FP.parse_article_pages(
             art.select("web_id", "board", "page_index", "dom_pos", "url",
-                       F.col("_html").alias("html"))).persist(heavy_level)
+                       F.col("_html").alias("html"))).persist(_HEAVY_CACHE)
         # F7: unparseable pages (PostException analog) become status rows
         # in parse_errors; everything downstream sees only parse-ok pages
         # (the reference's per-article try/except skip,
@@ -522,27 +493,19 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         parsed_articles = parsed_ok.drop(
             "parse_error", "pushes", "expected_caption", "url")
         parsed_pushes = FP.pushes_from_parsed(parsed_ok)
-        # images/verify read the binary column from the fetched cache; the
+        # images read the binary column from the fetched cache; the
         # parse-ok + date-kept row set arrives as a BROADCAST join against
-        # the narrow parsed frame (web_ids + caption), not an html re-scan
-        kept = F.broadcast(parsed_ok.select(
-            F.col("web_id").alias("image_id"), "expected_caption"))
-        art_img = (art.where(F.col("image_bytes").isNotNull())
-                   .select(F.col("web_id").alias("image_id"),
-                           F.col("image_bytes").alias("bytes"),
-                           "w", "h", "fmt", "caption", "phash")
-                   .join(kept, "image_id"))
-        images = art_img.drop("expected_caption")
+        # the narrow parsed frame's web_ids, not an html re-scan
+        kept = F.broadcast(parsed_ok.select(F.col("web_id").alias("image_id")))
+        images = (art.where(F.col("image_bytes").isNotNull())
+                  .select(F.col("web_id").alias("image_id"),
+                          F.col("image_bytes").alias("bytes"),
+                          "w", "h", "fmt", "caption", "phash")
+                  .join(kept, "image_id"))
         tables["parsed_articles"] = parsed_articles
         tables["parsed_pushes"] = parsed_pushes
         tables["images"] = images
         tables["parse_errors"] = parse_errors
-        if cfg.verify_payload and not cfg.verify_async:
-            # north-rule per-row invariant: decode + PSNR vs reference
-            # render + phash recompute + caption==title, Arrow-batched.
-            # (verify_async runs this same stage as a post-commit job over
-            # the committed tables instead — see _submit_verify below)
-            tables["payload_verify"] = V.verify_payloads(art_img)
         article_index = entries.select(
             F.col("entry_web_id").alias("web_id"), "board",
             F.col("page_index").alias("index"))
@@ -672,60 +635,37 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         # fully materialized — every job reads the cache, nothing races to
         # recompute it), so their wall time hides behind the write jobs.
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        ckpt_pool = ThreadPoolExecutor(max_workers=2)
+
         def _in_loop_pool(fn):
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
             return fn()
 
-        fut_frontier = ckpt_pool.submit(
-            _in_loop_pool,
-            lambda: frontier_next.repartition(n_shuffle, "url")
-            .localCheckpoint(eager=True))
-        fut_politeness = ckpt_pool.submit(
-            _in_loop_pool,
-            lambda: politeness_next.localCheckpoint(eager=True))
-        # PIPELINED COMMIT: batch k's durability writes (output tables +
-        # state + marker) run on a single-slot background thread while the
-        # loop plans and materializes batch k+1 — the loop's only serial
-        # dependency between batches is the checkpointed frontier/politeness
-        # (awaited below), not the table writes. Await-before-submit on the
-        # one-slot pool keeps commits strictly sequential, so the marker
-        # order (= resume order) is exactly the unpipelined one and a crash
-        # still leaves at most one uncommitted orphan batch. The caches a
-        # commit reads (fetched/parsed/marked/new_rows) stay persisted until
-        # ITS commit completes — unpersist is deferred one batch. Net effect:
-        # steady-state cadence = max(compute, commit) instead of their sum.
-        if commit_fut is not None:
-            commit_fut.result()
-            for df in commit_caches:
-                df.unpersist()
-            _submit_verify(batch_id - 1)
-            ph.mark("await previous commit")
-        full_due = batch_id % cfg.compact_every == 0
-        commit_fut = commit_pool.submit(
-            ST.commit_batch, out_dir, batch_id,
-            frontier=frontier_next if full_due else None,
-            politeness=politeness_next, metrics=metrics,
-            tables=tables,
-            frontier_delta=None if full_due else delta)
-        commit_caches = [fetched, parsed_all, new_rows, marked]
+        with ThreadPoolExecutor(max_workers=2) as ckpt_pool:
+            fut_frontier = ckpt_pool.submit(
+                _in_loop_pool,
+                lambda: frontier_next.repartition(n_shuffle, "url")
+                .localCheckpoint(eager=True))
+            fut_politeness = ckpt_pool.submit(
+                _in_loop_pool,
+                lambda: politeness_next.localCheckpoint(eager=True))
+            # the durability writes (output tables + state + marker) run on
+            # this thread beside the two checkpoint jobs; the batch ends when
+            # its own commit lands, so one batch's heavy caches are resident
+            # at a time
+            full_due = batch_id % _COMPACT_EVERY == 0
+            ST.commit_batch(out_dir, batch_id,
+                            frontier=frontier_next if full_due else None,
+                            politeness=politeness_next, metrics=metrics,
+                            tables=tables,
+                            frontier_delta=None if full_due else delta)
         frontier = fut_frontier.result()
         politeness = fut_politeness.result()
-        ckpt_pool.shutdown()
-        if not cfg.pipeline_commits:
-            # sequential commits (default): the write jobs still overlap the
-            # frontier/politeness checkpoints above, but the batch does not
-            # end until its own commit lands — one batch's heavy caches
-            # resident at a time, all cores on one batch's jobs
-            commit_fut.result()
-            commit_fut = None
-            for df in commit_caches:
-                df.unpersist()
-            commit_caches = []
-            # batch N durably committed → its verify runs while batch N+1
-            # computes (reads the committed parquet, pins no cache)
-            _submit_verify(batch_id)
-        ph.mark("commit submit + checkpoint")
+        for df in (fetched, parsed_all, new_rows, marked):
+            df.unpersist()
+        # batch N durably committed → its verify runs while batch N+1
+        # computes (reads the committed parquet, pins no cache)
+        _submit_verify(batch_id)
+        ph.mark("commit + checkpoint")
         n_rows = sum(c for c, _ in kc.values())
         stats = {
             "batch_id": batch_id,
@@ -736,32 +676,22 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             "wall_s": round(time.perf_counter() - t_batch, 3),
             "phase_s": dict(ph.times),
         }
-        if TM.ENABLED:
-            tm_after = TM.sample(spark)
-            d = TM.delta(tm_before, tm_after)
-            if d is not None:
-                stats["task_metrics"] = d
-            # re-arm even when this batch's delta was lost (e.g. the UI
-            # wasn't up for the baseline sample) so later batches meter
-            if tm_after is not None:
-                tm_before = tm_after
+        tm_after = TM.sample(spark)
+        d = TM.delta(tm_before, tm_after)
+        if d is not None:
+            stats["task_metrics"] = d
+        # re-arm even when this batch's delta was lost (e.g. the UI
+        # wasn't up for the baseline sample) so later batches meter
+        if tm_after is not None:
+            tm_before = tm_after
         batch_stats.append(stats)
         n_fetched_total += n_rows
-        # caches are unpersisted when THIS batch's background commit is
-        # awaited (top of the next iteration / after the loop)
 
-    if commit_fut is not None:
-        commit_fut.result()
-        for df in commit_caches:
-            df.unpersist()
-        commit_fut = None
-        _submit_verify(batch_id)
-    commit_pool.shutdown()
     if verify_fut is not None:
         verify_fut.result()
     verify_pool.shutdown()
 
-    if batch_stats and batch_id % cfg.compact_every != 0:
+    if batch_stats and batch_id % _COMPACT_EVERY != 0:
         # cheap-read compaction: downstream consumers (store/export) read
         # result.frontier() many times — give them a single parquet dir
         # instead of a base+delta merge. Written AFTER the final marker;
@@ -789,7 +719,7 @@ def mark_for_recrawl(spark: SparkSession, out_dir: str, urls,
     ``urls``: DataFrame with a ``url`` column (or list of url strings).
     Returns the number of frontier rows flipped.
     """
-    cfg = cfg or CrawlConfig()
+    seen = _seen_filter(cfg or CrawlConfig())
     if not isinstance(urls, DataFrame):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
     snap = ST.load_snapshot(spark, out_dir)
@@ -807,7 +737,9 @@ def mark_for_recrawl(spark: SparkSession, out_dir: str, urls,
         .drop("_re")
     )
     new_batch = snap.batch_id + 1
-    _carry_filter(out_dir, snap.batch_id, new_batch, cfg)
+    # carry the seen-filter blobs forward so the new snapshot is complete
+    if seen is not None and seen.load(out_dir, snap.batch_id):
+        seen.save(out_dir, new_batch)
     ST.commit_batch(out_dir, new_batch, frontier_next, snap.politeness,
                     extra={"recrawl_marked": n})
     return n
@@ -822,6 +754,7 @@ def purge_urls(spark: SparkSession, out_dir: str, urls,
     Purged URLs CAN later be re-discovered and re-crawled as brand-new
     frontier rows. Returns the number of rows deleted."""
     cfg = cfg or CrawlConfig()
+    seen = _seen_filter(cfg)
     if not isinstance(urls, DataFrame):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
     snap = ST.load_snapshot(spark, out_dir)
@@ -831,35 +764,15 @@ def purge_urls(spark: SparkSession, out_dir: str, urls,
     doomed = snap.frontier.join(urls, "url", "left_semi")
     n = doomed.count()
     frontier_next = snap.frontier.join(urls, "url", "left_anti")
-    filter_kind = cfg.seen_filter or ("bloom" if cfg.use_bloom else "")
     new_batch = snap.batch_id + 1
-    if filter_kind == "cuckoo":
-        from ..operators import cuckoo as CK
-        ck = CK.CuckooState(cfg.bloom_partitions)
-        if ck.load(out_dir, snap.batch_id):
-            ck.remove(doomed.select("url_hash"))
-            ck.save(out_dir, new_batch)
-    elif filter_kind == "bloom":
-        from ..operators import bloom as BL
-        bl = BL.BloomState(cfg.bloom_partitions, cfg.bloom_bits_per_key)
-        bl.rebuild(frontier_next.select("url_hash"))
-        bl.save(out_dir, new_batch)
+    if cfg.seen_filter == "cuckoo":
+        if seen.load(out_dir, snap.batch_id):
+            seen.remove(doomed.select("url_hash"))
+            seen.save(out_dir, new_batch)
+    elif seen is not None:
+        seen.rebuild(frontier_next.select("url_hash"))
+        seen.save(out_dir, new_batch)
     ST.commit_batch(out_dir, new_batch, frontier_next, snap.politeness,
                     extra={"purged": n})
     return n
 
-
-def _carry_filter(out_dir: str, old_batch: int, new_batch: int,
-                  cfg: CrawlConfig) -> None:
-    """Copy the seen-filter blobs forward so the new snapshot is complete."""
-    filter_kind = cfg.seen_filter or ("bloom" if cfg.use_bloom else "")
-    if filter_kind == "cuckoo":
-        from ..operators import cuckoo as CK
-        st = CK.CuckooState(cfg.bloom_partitions)
-    elif filter_kind == "bloom":
-        from ..operators import bloom as BL
-        st = BL.BloomState(cfg.bloom_partitions, cfg.bloom_bits_per_key)
-    else:
-        return
-    if st.load(out_dir, old_batch):
-        st.save(out_dir, new_batch)

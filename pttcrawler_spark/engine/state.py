@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -149,11 +148,8 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
     for name, df in (tables or {}).items():
         jobs.append((str(Path(out_dir) / TABLES / name / f"batch={batch_id}"), df, False))
 
-    debug = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
-
     def _write(item: tuple[str, DataFrame, bool]) -> None:
         path, df, is_state = item
-        t0 = time.perf_counter()
         # commit writes run in their own FAIR pool so the crawl loop's
         # next-batch jobs (pool "loop") share executors with them instead
         # of queueing behind 30-45 s of payload writes (session.py conf)
@@ -192,22 +188,11 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
         else:
             (df.coalesce(par).write.mode("overwrite")
              .option("compression", "snappy").parquet(path))
-        if debug:
-            # stderr: bench.py's stdout contract is one JSON line
-            print(f"        [write] {Path(path).name if 'batch=' not in Path(path).name else Path(path).parent.name}: "
-                  f"{time.perf_counter() - t0:.2f}s", flush=True,
-                  file=sys.stderr)
 
     with ThreadPoolExecutor(max_workers=min(8, len(jobs))) as ex:
         list(ex.map(_write, jobs))  # list() re-raises the first failure
     payload = {"batch_id": batch_id, "committed_at": time.time(), **(extra or {})}
     (d / "_COMMIT.json").write_text(json.dumps(payload))
-
-
-def commit_snapshot(out_dir: str, batch_id: int, frontier: DataFrame,
-                    politeness: DataFrame, metrics: DataFrame | None,
-                    extra: dict | None = None) -> None:
-    commit_batch(out_dir, batch_id, frontier, politeness, metrics, extra=extra)
 
 
 def latest_committed(out_dir: str) -> int | None:
@@ -277,11 +262,6 @@ def write_frontier_compaction(out_dir: str, batch_id: int,
     readers only trust it once Spark's _SUCCESS lands (see module doc)."""
     _sized(frontier).write.mode("overwrite").parquet(
         str(_batch_dir(out_dir, batch_id) / "frontier"))
-
-
-def write_table_batch(df: DataFrame, out_dir: str, name: str, batch_id: int) -> None:
-    _sized(df).write.mode("overwrite").parquet(
-        str(Path(out_dir) / TABLES / name / f"batch={batch_id}"))
 
 
 def read_table(spark: SparkSession, out_dir: str, name: str,

@@ -13,10 +13,10 @@ UI REST API at batch boundaries so each batch carries a delta:
       < 1 on busy cores means off-CPU time: memory stalls, lock waits, I/O;
   gc_frac = jvmGcTime / executorRunTime.
 
-Enabled via SPARK_GRAFT_TASK_METRICS=1 (bench scaling workers set it); the
-Spark UI must be on (bench enables it for instrumented runs). Fail-soft: any
-error returns None and the crawl proceeds unmetered — instrumentation must
-never fail a run.
+The crawl samples every batch; a sample is None unless the Spark UI is on
+(spark.ui.enabled, off in session.get_spark), so a session with the UI off
+runs unmetered. Fail-soft: any error also returns None and the crawl
+proceeds unmetered — instrumentation must never fail a run.
 
 On a real cluster the same numbers come from the history server / metrics
 sink; nothing here is local-mode-specific except the localhost UI URL.
@@ -25,10 +25,7 @@ sink; nothing here is local-mode-specific except the localhost UI URL.
 from __future__ import annotations
 
 import json
-import os
 import urllib.request
-
-ENABLED = os.environ.get("SPARK_GRAFT_TASK_METRICS") == "1"
 
 _FIELDS = {
     # REST field                 -> sample key

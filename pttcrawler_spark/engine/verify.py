@@ -140,15 +140,14 @@ def verify_payloads(
     return df.select(*cols).mapInPandas(run, schema=VERIFY_DDL)
 
 
-# --- pipelined (post-commit) verify -----------------------------------------
+# --- post-commit verify -------------------------------------------------------
 #
 # At scale the verify stage is a DOWNSTREAM CONSUMER of the crawl, not part
 # of the crawl's durability barrier: its input is the committed ``images``
-# table, its output is derived (recomputable) data. Running it as a
-# follow-on job per batch lets batch k's verify overlap batch k+1's
+# table, its output is derived (recomputable) data. The crawl runs it as a
+# follow-on job per batch, so batch k's verify overlaps batch k+1's
 # admit/fetch/parse — Python+memory-bus work overlapping JVM-heavy work —
-# without pinning batch k's heavy in-memory cache (the problem that got
-# whole-commit pipelining gated off, CrawlConfig.pipeline_commits).
+# and it reads parquet, so it pins none of batch k's heavy in-memory cache.
 #
 # The ``expected_caption`` column is NOT stored in the images table; it is
 # re-derived from the committed parsed_articles table. Safe because

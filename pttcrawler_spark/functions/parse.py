@@ -191,15 +191,6 @@ def parse_error(html: Column) -> Column:
     return F.when(~has_metas & ~has_trans, F.lit(PARSE_ERROR_MSG))
 
 
-# --- F8 / A3: push tag classification + tally (crawler/article.py:356-365) --
-def tag_class(push_tag: Column) -> Column:
-    return (
-        F.when(push_tag == "推", F.lit("push"))
-        .when(push_tag == "噓", F.lit("boo"))
-        .otherwise(F.lit("neutral"))
-    )
-
-
 # --- assembled parse stages --------------------------------------------------
 def parse_index_pages(fetched: DataFrame) -> DataFrame:
     """Index pages → one row per entry (web_id, href, dom_pos), DOM order.
@@ -269,24 +260,6 @@ def parse_articles(fetched: DataFrame) -> DataFrame:
     )
 
 
-def parse_pushes(fetched: DataFrame) -> DataFrame:
-    """Article pages → PARSED_PUSH rows; floor = 1-based DOM position (W4)."""
-    exploded = (
-        fetched.select("web_id", F.posexplode(push_divs(F.col("html"))).alias("pos", "div"))
-    )
-    f = push_fields(F.col("div"))
-    return exploded.select(
-        "web_id",
-        (F.col("pos") + 1).cast("int").alias("floor"),
-        f["push_tag"].alias("push_tag"),
-        f["push_username"].alias("push_username"),
-        f["push_content"].alias("push_content"),
-        f["push_ipdatetime"].alias("push_ipdatetime"),  # raw, for the S9 doc
-        push_ip(f["push_ipdatetime"]).alias("push_ip"),
-        push_datetime(f["push_ipdatetime"]).alias("push_datetime"),
-    )
-
-
 def parse_article_pages(fetched: DataFrame) -> DataFrame:
     """Single-pass article parse: one scan of ``html`` yields the article
     fields (= :func:`parse_articles`), the push divs as an ``array<struct>``
@@ -306,13 +279,7 @@ def parse_article_pages(fetched: DataFrame) -> DataFrame:
     carry = [c for c in ("url",) if c in fetched.columns]
     pushes = F.transform(
         push_divs(html),
-        lambda d: F.struct(
-            _trim(F.regexp_extract(d, RE_PUSH_TAG, 1)).alias("push_tag"),
-            _trim(F.regexp_extract(d, RE_PUSH_USERID, 1)).alias("push_username"),
-            _trim(F.substring(F.regexp_extract(d, RE_PUSH_CONTENT, 1),
-                              2, 0x7FFFFFFF)).alias("push_content"),
-            _trim(F.regexp_extract(d, RE_PUSH_IPDATETIME, 1)).alias("push_ipdatetime"),
-        ),
+        lambda d: F.struct(*[c.alias(k) for k, c in push_fields(d).items()]),
     )
     expected_caption = F.coalesce(
         F.try_element_at(meta_values(html), F.lit(2)), F.lit(""))

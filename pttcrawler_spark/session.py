@@ -46,13 +46,15 @@ def get_spark(
         # (SPARK_GRAFT_GC_INTERVAL overrides; see BASELINE.md scaling notes)
         .config("spark.cleaner.periodicGC.interval",
                 os.environ.get("SPARK_GRAFT_GC_INTERVAL", "120s"))
-        # FAIR job scheduling: the crawl loop PIPELINES each batch's
-        # durability writes (pool "commit", engine/state.py) with the next
-        # batch's planning/checkpoint jobs (pool "loop", engine/crawl.py) —
-        # under FIFO the next batch's 2-second checkpoints queue behind
-        # 30-45 s of payload writes and the pipeline degenerates back to
-        # serial. Pools are auto-created on first use; threads that never
-        # set a pool land in "default" and see plain FIFO behavior.
+        # FAIR job scheduling: two overlaps remain in the crawl loop. A
+        # batch's frontier/politeness checkpoints (pool "loop",
+        # engine/crawl.py) run beside its own commit writes (pool "commit",
+        # engine/state.py), and batch k's post-commit verify (pool
+        # "commit", engine/verify.py) runs beside batch k+1's jobs. Under
+        # FIFO the checkpoints and the next batch's jobs would queue behind
+        # the payload writes and the verify. Pools are auto-created on
+        # first use; threads that never set a pool land in "default" and
+        # see plain FIFO behavior.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

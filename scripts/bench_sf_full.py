@@ -125,20 +125,31 @@ def main() -> None:
     bench._noop_run(qmap["p1_point_lookup"](spark, args.sf01_dir))  # warmup
 
     if args.update:
-        upd = [k.strip() for k in args.update.split(",")]
+        upd = list(dict.fromkeys(
+            k.strip() for k in args.update.split(",") if k.strip()))
         with open(args.out) as fh:
             prev = json.load(fh)
         t01 = dict(prev["sf0.1_seconds"])
         t1 = dict(prev["sf1_seconds"])
         t01.update(time_keys(spark, qmap, upd, args.sf01_dir, label="sf0.1"))
         t1.update(time_keys(spark, qmap, upd, args.sf1_dir, label="sf1"))
-        prev.setdefault("updated_keys", []).extend(upd)
+        prev["updated_keys"] = list(dict.fromkeys(
+            prev.get("updated_keys", []) + upd))
     else:
         t01 = time_keys(spark, qmap, names, args.sf01_dir, label="sf0.1")
         t1 = time_keys(spark, qmap, measured, args.sf1_dir, label="sf1")
         prev = {}
-    ratios = {k: round(t1[k] / max(t01[k], 1e-9), 2) for k in measured}
-    over_bar = sorted((k for k in measured if ratios[k] > 12),
+    ratios = {}
+    for k in measured:
+        if k in t01 and k in t1:
+            ratios[k] = round(t1[k] / max(t01[k], 1e-9), 2)
+        else:
+            # a key added to the suite since the artifact was written has
+            # no timing on one side until a full (non --update) run
+            print(f"warning: {k} has no timing at "
+                  f"{'sf0.1' if k not in t01 else 'sf1'}; ratio skipped",
+                  file=sys.stderr)
+    over_bar = sorted((k for k in ratios if ratios[k] > 12),
                       key=lambda k: -ratios[k])
     result = {
         "metric": "sf1_vs_sf0.1_full_suite",

@@ -155,3 +155,25 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
         assert (fr.toPandas().status == "fetched").all()
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_unknown_seen_filter_raises_everywhere(spark, small):
+    """A mistyped seen_filter fails loudly in every flow that maintains the
+    filter, before anything is committed."""
+    from pttcrawler_spark.engine import state as ST
+    cfg, pdf, corpus = small
+    out = tempfile.mkdtemp(prefix="crawl_badfilter_")
+    try:
+        _crawl(spark, corpus, cfg, out)
+        committed = ST.latest_committed(out)
+        bad = C.CrawlConfig(seen_filter="cukoo")
+        url = cfg.base_url(cfg.board_name(0))
+        with pytest.raises(ValueError, match="unknown seen_filter"):
+            _crawl(spark, corpus, cfg, out, resume=True, seen_filter="cukoo")
+        with pytest.raises(ValueError, match="unknown seen_filter"):
+            C.mark_for_recrawl(spark, out, [url], bad)
+        with pytest.raises(ValueError, match="unknown seen_filter"):
+            C.purge_urls(spark, out, [url], bad)
+        assert ST.latest_committed(out) == committed
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

@@ -1,12 +1,11 @@
-"""Pipelined (post-commit) verify: equivalence with the inline stage and
-crash-repair semantics.
+"""Post-commit verify: equivalence with a reference built from the oracle,
+and crash-repair semantics.
 
-The async path (CrawlConfig.verify_async, default ON) runs the north-rule
-verify as a follow-on job per batch over the COMMITTED images +
-parsed_articles tables instead of a write inside the commit barrier. Its
-row set and verdicts must be identical to the inline stage, and a kill
-between a batch's _COMMIT marker and its payload_verify write must heal on
-resume (engine/verify.repair_missing_verify).
+The crawl runs the north-rule verify as a follow-on job per batch over the
+COMMITTED images + parsed_articles tables. Its row set and verdicts must be
+identical to the same stage run directly over the oracle's payloads, and a
+kill between a batch's _COMMIT marker and its payload_verify write must heal
+on resume (engine/verify.repair_missing_verify).
 """
 
 from __future__ import annotations
@@ -15,11 +14,15 @@ import shutil
 import tempfile
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
 from conftest import seeds_for
 from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.engine import verify as V
+
+PAYLOAD_DDL = ("image_id string, bytes binary, w int, h int, fmt string, "
+               "caption string, phash long, expected_caption string")
 
 
 def _run(spark, corpus_pdf, site_cfg, **cfg_kwargs):
@@ -35,23 +38,40 @@ def _pv(res):
     return pdf.sort_values("image_id").reset_index(drop=True)
 
 
-def test_async_matches_inline(spark, corpus_pdf, site_cfg):
-    res_a, out_a = _run(spark, corpus_pdf, site_cfg, verify_async=True)
-    res_i, out_i = _run(spark, corpus_pdf, site_cfg, verify_async=False)
-    try:
-        a, i = _pv(res_a), _pv(res_i)
-        assert len(a) > 0
-        assert a.equals(i), "async verify diverged from inline stage"
-        # derived-data trust marker: every async verify dir has _SUCCESS
-        for p in (Path(out_a) / "tables" / "payload_verify").glob("batch=*"):
-            assert (p / "_SUCCESS").exists()
-    finally:
-        shutil.rmtree(out_a, ignore_errors=True)
-        shutil.rmtree(out_i, ignore_errors=True)
+def _oracle_payloads(corpus_pdf, oracle) -> pd.DataFrame:
+    """The corpus payload rows of the articles the oracle stored, with the
+    expected caption taken from each article's history title."""
+    title = {h["article_id"]: h["title"] for h in oracle.histories}
+    rows = corpus_pdf[(corpus_pdf["kind"] == "article")
+                      & corpus_pdf["web_id"].isin(list(oracle.articles))
+                      & corpus_pdf["image_bytes"].notna()]
+    return pd.DataFrame({
+        "image_id": rows["web_id"],
+        "bytes": rows["image_bytes"],
+        "w": rows["w"].astype("int32"),
+        "h": rows["h"].astype("int32"),
+        "fmt": rows["fmt"],
+        "caption": rows["caption"],
+        "phash": rows["phash"].astype("Int64"),
+        "expected_caption": [title[oracle.articles[w]["id"]]
+                             for w in rows["web_id"]],
+    })
+
+
+def test_async_matches_inline(spark, corpus_pdf, oracle, crawled):
+    ref = (V.verify_payloads(spark.createDataFrame(
+        _oracle_payloads(corpus_pdf, oracle), PAYLOAD_DDL)).toPandas()
+        .sort_values("image_id").reset_index(drop=True))
+    got = _pv(crawled)
+    assert len(got) > 0
+    assert got.equals(ref), "post-commit verify diverged from the oracle's"
+    # derived-data trust marker: every verify dir has _SUCCESS
+    for p in (Path(crawled.out_dir) / "tables" / "payload_verify").glob("batch=*"):
+        assert (p / "_SUCCESS").exists()
 
 
 def test_repair_after_kill_between_marker_and_verify(spark, corpus_pdf, site_cfg):
-    res, out = _run(spark, corpus_pdf, site_cfg, verify_async=True)
+    res, out = _run(spark, corpus_pdf, site_cfg)
     try:
         want = _pv(res)
         pv_base = Path(out) / "tables" / "payload_verify"
