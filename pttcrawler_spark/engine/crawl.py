@@ -4,7 +4,7 @@ Re-expresses the reference's single-threaded loop (crawler/article.py:419-511
 + crawler/article_index.py:119-174) as a Structured-Streaming-style
 micro-batch drain over a frontier table:
 
-  pending → [per-host token bucket admit]  (operators/politeness)
+  pending → [robots split → per-host token bucket admit]  (operators/politeness)
           → [simulated fetch = join corpus] (network I/O stand-in)
           → bootstrap: getLastPage → seed index rows L..1     (F1)
           → index: parse entries → canonicalize → ANTI-JOIN dedupe → enqueue
@@ -109,7 +109,8 @@ class CrawlConfig:
     delay_s: float = 2.0            # config_example.ini:14
     batch_seconds: float = 60.0     # logical clock advance per micro-batch
     capacity: float | None = None   # token bucket burst; default = one batch refill
-    impl: str = "window"            # 'window' | 'pandas' politeness impl
+    # host → disallowed URL path prefixes; a matching row ends `failed` in
+    # the batch where it is first pending and spends no tokens
     robots: dict[str, list[str]] | None = None
     start_date: _dt.datetime | None = None  # P4 cutoff + early stop
     start_index: int = 1
@@ -267,16 +268,20 @@ def crawl(spark: SparkSession, corpus: DataFrame | None,
         # committed state) — resume of a pre-revision store keeps the
         # no-marker => r1_initial fallback
         MG.stamp_new_store(out_dir)
-        return _crawl_impl(spark, corpus, seeds, out_dir, cfg, resume,
-                           fetcher)
+        # single-slot pool for the post-commit verify jobs; leaving the
+        # `with` waits for a running one, so the lock is released after
+        # it even when a batch raises
+        with ThreadPoolExecutor(max_workers=1) as verify_pool:
+            return _crawl_impl(spark, corpus, seeds, out_dir, cfg, resume,
+                               fetcher, verify_pool)
     finally:
         ST.release_lock(lock)
 
 
 def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
-                seeds: list[tuple[str, str]],
-                out_dir: str, cfg: CrawlConfig | None = None,
-                resume: bool = False, fetcher=None) -> CrawlResult:
+                seeds: list[tuple[str, str]], out_dir: str,
+                cfg: CrawlConfig | None, resume: bool, fetcher,
+                verify_pool: ThreadPoolExecutor) -> CrawlResult:
     cfg = cfg or CrawlConfig()
     if corpus is None and fetcher is None:
         raise ValueError("need a corpus or a fetcher")
@@ -307,7 +312,6 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
     batch_stats: list[dict] = []
     # None unless the Spark UI is up (taskmetrics reads its REST API)
     tm_before = TM.sample(spark)
-    verify_pool = ThreadPoolExecutor(max_workers=1)   # single-slot: sequential verify
     verify_fut = None
 
     def _submit_verify(bid: int) -> None:
@@ -337,18 +341,14 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             break
 
         politeness = POL.refill(politeness, cfg.batch_seconds, cfg.burst)
-        strict = cfg.start_date is not None
-        if cfg.impl == "pandas":
-            marked = POL.admit_apply_in_pandas(pending, politeness, cfg.robots,
-                                               strict_barrier=strict)
-            blocked = marked.where(F.col("robots_blocked")).drop("admit", "robots_blocked")
-            marked = marked.drop("robots_blocked")
-        else:
-            # burst capacity is the literal per-host budget ceiling →
-            # WindowGroupLimit hot-host path (admit_window docstring)
-            marked = POL.admit_window(pending, politeness, strict_barrier=strict,
-                                      max_budget=math.ceil(cfg.burst))
-            blocked = None
+        blocked = None
+        if cfg.robots:
+            pending, blocked = POL.split_robots(pending, cfg.robots)
+        # burst capacity is the literal per-host budget ceiling →
+        # WindowGroupLimit hot-host path (admit_window docstring)
+        marked = POL.admit_window(pending, politeness,
+                                  strict_barrier=cfg.start_date is not None,
+                                  max_budget=math.ceil(cfg.burst))
 
         # marked is read by MANY consumers per batch (admitted → fetch join,
         # deferred → metrics/cancel, politeness spend, delta) — persist the
@@ -579,10 +579,10 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         cand_cnt = pre_anti.groupBy("host").agg(F.count("*").alias("_cand"))
         new_cnt = new_rows.groupBy("host").agg(F.count("*").alias("_new"))
         metrics = (
-            fetched.groupBy("host", "host_salt")
+            changed.groupBy("host", "host_salt")
             .agg(
-                F.sum(F.when(F.col("_html").isNotNull(), 1).otherwise(0)).alias("fetched"),
-                F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0)).alias("failed"),
+                F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("fetched"),
+                F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
             )
             .join(deferred, "host", "left")
             .join(cand_cnt, "host", "left")
@@ -689,7 +689,6 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
 
     if verify_fut is not None:
         verify_fut.result()
-    verify_pool.shutdown()
 
     if batch_stats and batch_id % _COMPACT_EVERY != 0:
         # cheap-read compaction: downstream consumers (store/export) read

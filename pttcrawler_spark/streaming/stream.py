@@ -5,11 +5,10 @@ The reference is a slow sequential stream processor in disguise: one index
 page per iteration, flush every 20/100 rows, crontab cadence
 (crawler/article.py:419-511, 546-549; schedule.py:68-110). Here:
 
-- ``frontier_file_stream`` + ``run_crawl_stream``: frontier rows arrive as
-  files; each micro-batch fetches/parses via ``foreachBatch`` using the same
-  engine stages as the batch loop — showing the engine's stages compose under
-  Spark's own micro-batch scheduler (Trigger.AvailableNow for tests,
-  processingTime='...' as the schedule.py cadence analog).
+- ``frontier_file_stream``: frontier rows arrive as JSON files, bounded per
+  micro-batch like the reference's 20-article flush; it feeds the operators
+  below. The crawl itself is the batch loop in engine/crawl.py, which owns
+  politeness, dedupe and the commit contract.
 - ``windowed_fetch_rate``: event-time tumbling window + watermark — the
   late-data-tolerant version of the reference's per-page tallies.
 - ``sessionize_stateful``: applyInPandasWithState — custom per-key state the
@@ -45,33 +44,6 @@ def frontier_file_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     return (spark.readStream.schema(FRONTIER_STREAM_SCHEMA)
             .option("maxFilesPerTrigger", 4)
             .json(dir_path))
-
-
-def run_crawl_stream(stream: DataFrame, corpus: DataFrame, out_dir: str,
-                     checkpoint_dir: str):
-    """foreachBatch crawl: each micro-batch joins the pending URLs against
-    the fetch source and appends parsed articles — the streaming twin of
-    engine/crawl.py's drain round (same parse stage, same dedup-by-data
-    discipline). Returns the started StreamingQuery (AvailableNow: drains
-    everything then stops — the test/cron-cadence trigger)."""
-    from ..functions import parse as FP
-
-    pages = corpus.select("url", F.col("html").alias("_html"))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        got = batch_df.join(pages, "url", "left")
-        art = (got.where((F.col("kind") == "article") & F.col("_html").isNotNull())
-               .withColumn("web_id", FP.web_id_of(F.col("url"))))
-        parsed = FP.parse_articles(
-            art.select("web_id", "board", "page_index", "dom_pos",
-                       F.col("_html").alias("html")))
-        (parsed.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    return (stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
 
 
 def windowed_fetch_rate(stream: DataFrame, window_s: int = 60,

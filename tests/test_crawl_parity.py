@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from urllib.parse import urlsplit
 
 import pytest
 from pyspark.sql import functions as F
@@ -188,42 +189,39 @@ def test_resume_bit_identical(spark, site_cfg, corpus_pdf, crawled):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_pandas_impl_small_corpus(spark):
-    """applyInPandas politeness path: full parity on a small corpus."""
+def test_robots_blocking(spark):
+    """robots disallow rules fail matching URLs and never fetch them, on
+    the crawl's only admit path: the rest of the crawl keeps the oracle's
+    per-host order and seen set, and the committed metrics count every
+    blocked row as failed. Two rules: every article, then one article."""
     cfg1 = SiteConfig(n_boards=1, pages_per_board=2, articles_per_page=3)
     pdf = generate_site_pandas(cfg1)
     sim = run_oracle(pdf, cfg1)
-    corpus = spark.createDataFrame(pdf)
-    out = tempfile.mkdtemp(prefix="crawl_pandas_")
-    try:
-        res = C.crawl(spark, corpus, _seeds(cfg1), out,
-                      C.CrawlConfig(delay_s=2.0, batch_seconds=10.0, impl="pandas"))
-        eng = res.fetch_order().toPandas().sort_values(["host", "ord"])
-        ora = sim.fetch_events_df()
-        for host in ora.host.unique():
-            assert eng[eng.host == host].url.tolist() == ora[ora.host == host].url.tolist()
-        assert set(res.url_seen().toPandas().url) == sim.url_seen
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_robots_blocking(spark):
-    """robots disallow rules fail matching URLs and never fetch them."""
-    cfg1 = SiteConfig(n_boards=1, pages_per_board=2, articles_per_page=3)
-    pdf = generate_site_pandas(cfg1)
+    ora = sim.fetch_events_df()
     corpus = spark.createDataFrame(pdf)
     host = cfg1.host(cfg1.board_name(0))
-    out = tempfile.mkdtemp(prefix="crawl_robots_")
-    try:
-        res = C.crawl(spark, corpus, _seeds(cfg1), out,
-                      C.CrawlConfig(delay_s=2.0, batch_seconds=10.0, impl="pandas",
-                                    robots={host: ["/bbs/board00/M."]}))
-        fr = res.frontier().toPandas()
-        arts = fr[fr.kind == "article"]
-        assert len(arts) > 0 and (arts.status == "failed").all()
-        assert (fr[fr.kind == "index"].status == "fetched").all()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    one = urlsplit(sorted(ora[ora.kind == "article"].url)[1]).path
+    for prefix, n_blocked in (("/bbs/board00/M.", 6), (one, 1)):
+        blocked = {u for u in sim.url_seen
+                   if urlsplit(u).path.startswith(prefix)}
+        assert len(blocked) == n_blocked, prefix
+        out = tempfile.mkdtemp(prefix="crawl_robots_")
+        try:
+            res = C.crawl(spark, corpus, _seeds(cfg1), out,
+                          C.CrawlConfig(delay_s=2.0, batch_seconds=10.0,
+                                        robots={host: [prefix]}))
+            fr = res.frontier().toPandas().set_index("url")
+            assert (fr.loc[sorted(blocked), "status"] == "failed").all(), prefix
+            assert (fr[fr.kind == "index"].status == "fetched").all(), prefix
+            eng = res.fetch_order().toPandas().sort_values(["host", "ord"])
+            for h in ora.host.unique():
+                want = [u for u in ora[ora.host == h].url if u not in blocked]
+                assert eng[eng.host == h].url.tolist() == want, prefix
+            assert set(res.url_seen().toPandas().url) == sim.url_seen - blocked
+            failed = res.metrics().agg(F.sum("failed")).first()[0]
+            assert failed == len(blocked), prefix
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
 
 
 def test_crash_resume_replays_frontier_deltas(spark, site_cfg, corpus_pdf,

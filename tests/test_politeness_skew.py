@@ -89,19 +89,34 @@ def test_hostile_skew_budget_bound(spark, skew_parts):
     assert len(tail_counts) == N_TAIL and set(tail_counts) == {1}
 
 
+def _with_index_rows(frontier):
+    """Every fifth row (by discovery_seq) an index row — exercises the
+    discovery barrier."""
+    return frontier.withColumn(
+        "kind", F.when(F.col("discovery_seq") % 5 == 0,
+                       F.lit("index")).otherwise(F.col("kind"))
+    ).localCheckpoint()
+
+
 def test_hostile_skew_paths_agree(spark, skew_parts):
-    """admit_apply_in_pandas (north-rule shape) admits the identical URL
-    set under hostile skew — the pre-truncation means its pandas stage
-    never sees more than ceil(tokens)=4 rows of the hot host."""
+    """admit_apply_in_pandas (north-rule shape) sets the identical
+    (url, admit) bits as admit_window under hostile skew — the
+    pre-truncation means its pandas stage never sees more than
+    ceil(tokens)=4 rows of the hot host. Checked on the article-only
+    frontier and with index rows, with and without the strict barrier."""
     frontier, state = skew_parts
-    win = set(r["url"] for r in
-              admit_window(frontier, state).where("admit")
-              .select("url").collect())
-    pdf = set(r["url"] for r in
-              admit_apply_in_pandas(frontier, state).where("admit")
-              .select("url").collect())
-    assert win == pdf
-    assert len(win) == 3 + N_TAIL
+    with_idx = _with_index_rows(frontier)
+    for name, df in (("articles", frontier), ("with_idx", with_idx)):
+        for strict in (False, True):
+            win = {(r["url"], r["admit"]) for r in
+                   admit_window(df, state, strict_barrier=strict)
+                   .select("url", "admit").collect()}
+            pdf = {(r["url"], r["admit"]) for r in
+                   admit_apply_in_pandas(df, state, strict_barrier=strict)
+                   .select("url", "admit").collect()}
+            assert win == pdf, f"{name} strict={strict}"
+            if name == "articles":
+                assert sum(a for _, a in win) == 3 + N_TAIL
 
 
 def test_capped_window_matches_exact(spark, skew_parts):
@@ -119,10 +134,7 @@ def test_capped_window_matches_exact(spark, skew_parts):
                   admit_window(frontier, state, max_budget=cap).collect()}
         assert exact == capped, f"cap={cap}"
     # index rows + strict barrier: barrier semantics must survive capping
-    with_idx = frontier.withColumn(
-        "kind", F.when(F.col("discovery_seq") % 5 == 0,
-                       F.lit("index")).otherwise(F.col("kind")))
-    with_idx = with_idx.localCheckpoint()
+    with_idx = _with_index_rows(frontier)
     for strict in (False, True):
         exact = {(r["url"], r["admit"]) for r in
                  admit_window(with_idx, state,

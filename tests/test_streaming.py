@@ -1,6 +1,6 @@
 """Structured Streaming surface tests (pttcrawler_spark/streaming/stream.py):
-file-source crawl via foreachBatch, watermarked window agg, and the
-applyInPandasWithState sessionizer."""
+file-source frontier stream, watermarked window agg, the
+applyInPandasWithState sessionizer and the batch-twin equivalences."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pttcrawler_spark.streaming import stream as STR
-from pttcrawler_spark.synth.site import SiteConfig, generate_site_pandas
 
 
 def _write_frontier_files(d: Path, rows: list[dict], per_file: int = 5) -> None:
@@ -30,36 +29,6 @@ def stream_dirs(spark):
     base = Path(tempfile.mkdtemp(prefix="stream_test_"))
     yield base
     shutil.rmtree(base, ignore_errors=True)
-
-
-def test_foreachbatch_crawl_stream(spark, stream_dirs):
-    cfg = SiteConfig(n_boards=1, pages_per_board=2, articles_per_page=4)
-    pdf = generate_site_pandas(cfg)
-    corpus = spark.createDataFrame(pdf)
-    arts = pdf[pdf.kind == "article"]
-    rows = [{"url": r.url, "kind": "article", "board": r.board,
-             "page_index": int(r.page_index), "dom_pos": int(r.dom_pos),
-             "event_ts": "2025-08-01T00:00:00Z"} for r in arts.itertuples()]
-    src = stream_dirs / "frontier_in"
-    _write_frontier_files(src, rows, per_file=1)  # 7 files, 4/trigger → 2 batches
-
-    out = str(stream_dirs / "parsed_out")
-    chk = str(stream_dirs / "chk")
-    q = STR.run_crawl_stream(
-        STR.frontier_file_stream(spark, str(src)), corpus, out, chk)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == len(rows)
-    # micro-batches were bounded by maxFilesPerTrigger (>=2 batches)
-    assert got.select("batch_id").distinct().count() >= 2
-    # parse fields real: every article got an author + title
-    assert got.where(F.col("title") == "").count() == 0
-
-    # exactly-once on restart: rerun with same checkpoint → no new rows
-    q2 = STR.run_crawl_stream(
-        STR.frontier_file_stream(spark, str(src)), corpus, out, chk)
-    q2.awaitTermination(60)
-    assert spark.read.parquet(out).count() == len(rows)
 
 
 def test_windowed_fetch_rate_with_watermark(spark, stream_dirs):

@@ -119,3 +119,54 @@ def test_resume_heals_missing_verify(spark, corpus_pdf, site_cfg):
         assert pdf["pixel_ok"].all() and pdf["caption_ok"].all()
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_lock_outlives_verify_when_a_batch_raises(spark, corpus_pdf, site_cfg,
+                                                  monkeypatch):
+    """A batch whose commit raises must not release the store lock while
+    the previous batch's post-commit verify is still running: crawl waits
+    for that verify before _LOCK.json goes."""
+    import threading
+    import time
+
+    from pttcrawler_spark.engine import state as ST
+
+    fail_at = 2
+    raised = threading.Event()
+    ends: dict[int, float] = {}
+    released: list[float] = []
+    real_commit, real_verify = ST.commit_batch, V.verify_committed_batch
+    real_release = ST.release_lock
+
+    def commit(out_dir, batch_id, *args, **kwargs):
+        if batch_id == fail_at:
+            raised.set()
+            raise RuntimeError("injected commit failure")
+        return real_commit(out_dir, batch_id, *args, **kwargs)
+
+    def verify(spark_, out_dir, batch_id, *args, **kwargs):
+        if batch_id == fail_at - 1:
+            # still running when the next batch's commit raises
+            raised.wait(timeout=120)
+            time.sleep(0.5)
+        real_verify(spark_, out_dir, batch_id, *args, **kwargs)
+        ends[batch_id] = time.perf_counter()
+
+    def release(lock_path):
+        released.append(time.perf_counter())
+        real_release(lock_path)
+
+    monkeypatch.setattr(ST, "commit_batch", commit)
+    monkeypatch.setattr(V, "verify_committed_batch", verify)
+    monkeypatch.setattr(ST, "release_lock", release)
+    corpus = spark.createDataFrame(corpus_pdf)
+    out = tempfile.mkdtemp(prefix="crawl_va_lock_")
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            C.crawl(spark, corpus, seeds_for(site_cfg), out,
+                    C.CrawlConfig(delay_s=2.0, batch_seconds=20.0))
+        assert len(released) == 1
+        assert fail_at - 1 in ends, "crawl returned before the verify ended"
+        assert ends[fail_at - 1] < released[0]
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
