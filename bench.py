@@ -6,7 +6,7 @@ capture truncates, so the line stays well under 2000 chars — round 2's
 BENCH_r02.json had parsed:null because the full scaling blob rode along):
   {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec, ...},
    "sf": ..., "crawl_urls_per_sec": N, "scaling": {<summary only>}}
-Full per-batch / per-phase / task-metric detail goes to BENCH_DETAIL.json
+Full per-batch / per-phase detail goes to BENCH_DETAIL.json
 next to this file; the scaling run's full blob goes to BENCH_SCALING.json.
 
 Parts:
@@ -16,11 +16,12 @@ Parts:
   sink (full execution, no driver collect);
 - the crawl-engine throughput microbench (BASELINE.md target metric,
   URLs/sec) over a deterministic synthetic multi-host site;
-- the N-vs-4N scaling run (--scaling or SPARK_GRAFT_BENCH_SCALING=1): the
-  SAME crawl job on the SAME pre-generated corpus at local[2] / local[8] /
-  local[32], each level in a fresh JVM — the sandbox substitution for the
-  north rule's two-cluster-size criterion. Results are cached to
-  BENCH_SCALING.json and folded into later bench runs (marked "cached").
+- the N-vs-4N scaling run (--scaling): the SAME crawl job on the SAME
+  pre-generated corpus at local[2] / local[8] / local[32], each level in a
+  fresh JVM built by ``session.get_spark`` with the engine's shipped
+  settings — the sandbox substitution for the north rule's two-cluster-size
+  criterion. Results are cached to BENCH_SCALING.json and folded into later
+  bench runs (marked "cached").
 
 Worker mode (internal): ``python bench.py --crawl-worker --cores K
 --corpus DIR --site '<json>' --out F`` crawls a pre-generated corpus in a
@@ -78,10 +79,7 @@ SITE_DEFAULT = {"n_boards": 128, "pages_per_board": 3, "articles_per_page": 256,
 # full batch dropped, 6 metered) makes the per-level medians comparable
 SITE_SCALING = {"n_boards": 128, "pages_per_board": 5,
                 "articles_per_page": 1536, "img_w": 64, "img_h": 64}
-# override with SPARK_GRAFT_SCALING_LEVELS="4,16" for extra N→4N pairs
-SCALING_LEVELS = tuple(
-    int(x) for x in os.environ.get("SPARK_GRAFT_SCALING_LEVELS",
-                                   "2,8,32").split(","))
+SCALING_LEVELS = (2, 8, 32)
 
 
 def _noop_run(df) -> None:
@@ -115,63 +113,28 @@ def crawl_corpus(cores: int, site: dict, corpus_path: str) -> dict:
     from pttcrawler_spark.engine import crawl as C
     from pttcrawler_spark.session import get_spark
 
-    # 16 MB splits: the fetch scan's partition count caps the parallelism of
-    # every downstream stage in the batch (parse/verify/write); coarse splits
-    # of a ~2 GB page partition give fewer tasks than cores at local[32],
-    # and each concurrent write job then starves the machine through its
-    # straggler tail. On a real cluster the frontier is pre-partitioned by
-    # host_salt and this knob is sized per executor count the same way.
-    metered = os.environ.get("SPARK_GRAFT_TASK_METRICS") == "1"
     local_dir = tempfile.mkdtemp(prefix=f"spark_local_{cores}_", dir=SCRATCH)
-    # A/B knobs for the bench-worker JVM (defaults = committed config);
-    # used to bisect config regressions on this noisy host — see
-    # BASELINE.md scaling notes for the measured outcomes per variant
-    java_opts = os.environ.get(
-        "SPARK_GRAFT_BENCH_JAVA_OPTS",
-        "-XX:+AlwaysPreTouch -XX:+UseG1GC "
-        "-XX:+UnlockExperimentalVMOptions -XX:G1MaxNewSizePercent=10")
-    cache_compressed = os.environ.get("SPARK_GRAFT_CACHE_COMPRESSED", "false")
-    spark = get_spark(cores, app_name=f"crawl_bench_{cores}",
-                      extra_conf={
-                          # task-metric sampling reads the UI REST API
-                          # (engine/taskmetrics); port 0 = any free port
-                          **({"spark.ui.enabled": "true",
-                              "spark.ui.port": "0"} if metered else {}),
-                          "spark.sql.files.maxPartitionBytes":
-                          str(16 * 1024 * 1024),
-                          # the per-batch heavy caches are dominated by
-                          # image payload bytes that are ALREADY
-                          # codec-compressed — columnar-cache compression
-                          # on them doubles cache-build time at every core
-                          # count for ~no space (measured:
-                          # engine.crawl._HEAVY_CACHE comment)
-                          "spark.sql.inMemoryColumnarStorage.compressed":
-                          cache_compressed,
-                          # shuffle files + cache overflow on fast scratch,
-                          # not the VM's virtual disk (a real executor's
-                          # local NVMe)
-                          "spark.local.dir": local_dir,
-                          # AlwaysPreTouch: commit+zero the heap at JVM
-                          # startup (before the timed region) — first-touch
-                          # zeroing otherwise lands as kernel time inside
-                          # the first big batches. G1 with a BOUNDED young
-                          # gen: the per-batch cache blocks SURVIVE while
-                          # the batch runs, and an adaptive (huge) young
-                          # gen re-copies those GBs on every young pause —
-                          # measured 2.3 s young pauses and 50-80 % of task
-                          # time in GC at local[32]; bounded: 0.27 s pauses,
-                          # GC wall cut ~6x, steady batch 2.3x faster.
-                          # (ParallelGC+half-heap-young, the round-1
-                          # setting, has the same unbounded-young flaw.)
-                          "spark.driver.extraJavaOptions": java_opts,
-                      })
-    cfg = _site_cfg(site)
-    # NOT persisted: each batch re-scans the corpus through the broadcast
-    # fetch join (no shuffle); the OS page cache serves the re-reads, which
-    # is both faster and more stable than JVM storage-memory eviction
-    corpus = spark.read.parquet(corpus_path)
     out = tempfile.mkdtemp(prefix="crawl_bench_out_", dir=SCRATCH)
     try:
+        # deployment settings only; the engine's own come from get_spark
+        spark = get_spark(cores, app_name=f"crawl_bench_{cores}", extra_conf={
+            # shuffle files + cache overflow on fast scratch, not the VM's
+            # virtual disk (a real executor's local NVMe)
+            "spark.local.dir": local_dir,
+            # heap ∝ cores + a fixed driver allowance: "4N executors" means
+            # 4N x the executor MEMORY as well as the CPU — a flat heap
+            # hands the small level more GB/core than the large one,
+            # inflating the low-core baseline (less GC) and deflating every
+            # N→4N ratio. 1 GB/core plus a 4 GB share for the driver itself
+            # (a real cluster's driver is a separate fixed-size process).
+            "spark.driver.memory": f"{4 + cores}g",
+        })
+        cfg = _site_cfg(site)
+        # NOT persisted: each batch re-scans the corpus through the
+        # broadcast fetch join (no shuffle); the OS page cache serves the
+        # re-reads, which is both faster and more stable than JVM
+        # storage-memory eviction
+        corpus = spark.read.parquet(corpus_path)
         ccfg = C.CrawlConfig(delay_s=0.01, batch_seconds=60.0)
         t0 = time.perf_counter()
         res = C.crawl(spark, corpus, _seeds(cfg), out, ccfg)
@@ -198,17 +161,6 @@ def crawl_corpus(cores: int, site: dict, corpus_path: str) -> dict:
         # are reported.
         rates = sorted(b["fetched"] / b["wall_s"] for b in steady if b["wall_s"] > 0)
         median = rates[len(rates) // 2] if rates else 0.0
-        # steady-window task-metric summary: where the cores' time actually
-        # went (utilization / cpu / gc) — the per-level scaling evidence
-        steady_tm = None
-        metered = [b for b in steady if b.get("task_metrics")]
-        if metered:
-            from pttcrawler_spark.engine import taskmetrics as TM
-            tms = [b["task_metrics"] for b in metered]
-            agg = {k: sum(t[k] for t in tms) for k in tms[0]}
-            steady_tm = TM.summarize(
-                agg, cores, sum(b["wall_s"] for b in metered))
-            steady_tm["metered_batches"] = f"{len(metered)}/{len(steady)}"
         # per-phase medians over the steady window: the scaling question at
         # the NEXT level of detail — which named part of a batch (admit/fetch
         # planning, discovery, materialize-scan, materialize-parse,
@@ -228,7 +180,6 @@ def crawl_corpus(cores: int, site: dict, corpus_path: str) -> dict:
             "sustained_urls_per_sec": round(sustained, 2),
             "median_batch_urls_per_sec": round(median, 2),
             "batches": res.final_batch + 1,
-            **({"steady_task_metrics": steady_tm} if steady_tm else {}),
             **({"steady_phase_medians_s": phase_meds} if phase_meds else {}),
             "batch_stats": res.batch_stats,
         }
@@ -241,30 +192,6 @@ def _run_worker(cores: int, site: dict, corpus_path: str,
                 pin: bool = True) -> dict:
     with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as f:
         path = f.name
-    env = dict(os.environ)
-    # heap ∝ cores + a fixed driver allowance: "4N executors" means 4N x the
-    # executor MEMORY as well as the CPU — a flat heap hands the small level
-    # 12 GB/core vs 0.75 GB/core at 32, inflating the low-core baseline
-    # (less GC) and deflating every N→4N ratio. 1.5 GB/core matches a
-    # typical executor spec; the 4 GB base is the driver's own share (a real
-    # cluster's driver is a separate fixed-size process). The 32-thread
-    # level needs >8 GB regardless (GCLocker retry aborts in Arrow/parquet
-    # allocation paths under tiny heaps); the box has 125 GiB.
-    # (With the heavy caches off-heap — crawl_corpus sizes
-    # spark.memory.offHeap ∝ cores — the heap holds execution memory and
-    # transient churn only; 1 GB/core + the 4 GB driver share. The old
-    # 1.5 GB/core sizing dated from the caches living ON-heap, and its
-    # AlwaysPreTouch'd-but-idle tail was pure resident-memory pressure.)
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{4 + cores}g")
-    # a forced periodic full GC is a stop-the-world pause whose cost is
-    # core-count-independent — inside a ~4 min measured run it lands as
-    # random 5-15 s stalls that swamp the level-to-level signal. One run
-    # fits comfortably in a single cleaner interval; steady-state block
-    # cleanup is covered by the explicit unpersists in the crawl loop.
-    env.setdefault("SPARK_GRAFT_GC_INTERVAL", "600s")
-    # per-batch task-metric deltas (engine/taskmetrics): utilization/cpu/gc
-    # evidence per level; sampling cost is one localhost REST GET per batch
-    env.setdefault("SPARK_GRAFT_TASK_METRICS", "1")
     # CPU QUOTA, not thread count: an unpinned local[2] worker really uses
     # ~4-6 cores (2 task threads + 2 concurrent Python pandas-UDF workers +
     # GC/commit threads), overstating the low-core baseline and deflating
@@ -279,7 +206,7 @@ def _run_worker(cores: int, site: dict, corpus_path: str,
             prefix + [sys.executable, os.path.abspath(__file__), "--crawl-worker",
                       "--cores", str(cores), "--corpus", corpus_path,
                       "--site", json.dumps(site), "--out", path],
-            check=True, cwd=REPO, timeout=7200, env=env,
+            check=True, cwd=REPO, timeout=7200,
         )
         with open(path) as fh:
             return json.load(fh)
@@ -481,8 +408,8 @@ def main() -> None:
             prepare_corpus(spark, SITE_DEFAULT, corpus_path)
             crawl = crawl_corpus(cpus, SITE_DEFAULT, corpus_path)
             detail["crawl"] = crawl
-            # printed line: throughput numbers only — per-batch stats,
-            # phase medians and task metrics live in BENCH_DETAIL.json
+            # printed line: throughput numbers only — per-batch stats and
+            # phase medians live in BENCH_DETAIL.json
             for k in ("urls_per_sec", "sustained_urls_per_sec",
                       "median_batch_urls_per_sec"):
                 result[f"crawl_{k}"] = crawl[k]
@@ -492,7 +419,7 @@ def main() -> None:
 
     cache = os.path.join(REPO, "BENCH_SCALING.json")
     scaling = None
-    if args.scaling or os.environ.get("SPARK_GRAFT_BENCH_SCALING") == "1":
+    if args.scaling:
         scaling = scaling_bench(spark)
         with open(cache, "w") as fh:
             json.dump(scaling, fh, indent=2)

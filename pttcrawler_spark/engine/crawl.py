@@ -63,12 +63,12 @@ from . import verify as V
 # they live (all measured on the scaling corpus, 172k-URL steady batches, G1):
 # - in-memory columnar CACHE COMPRESSION on image payload bytes is pure
 #   waste (they are already codec-compressed): cache build 2x slower at
-#   every core count. Payload-heavy sessions should set
-#   spark.sql.inMemoryColumnarStorage.compressed=false (bench does).
+#   every core count. get_spark leaves it on: no perfbench workload told
+#   spark.sql.inMemoryColumnarStorage.compressed=false apart from noise.
 # - an ADAPTIVE (unbounded) G1 young gen re-copies the GBs of surviving
 #   cache blocks on every young pause: 2.3 s pauses, 50-80 % of task time
-#   in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10)
-#   promotes the blocks once and cuts GC wall ~6x.
+#   in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10, a
+#   deployment JVM flag) promotes the blocks once and cuts GC wall ~6x.
 # - OFF_HEAP (tried as the GC fix before the two findings above) builds
 #   blocks ~2x slower than on-heap uncompressed (an extra serialization
 #   pass into Unsafe buffers) and lost end-to-end once young-gen was

@@ -69,17 +69,3 @@ def delta(before: dict | None, after: dict | None) -> dict | None:
         return None
     return {k: after[k] - before[k] for k in after}
 
-
-def summarize(d: dict | None, cores: int, wall_s: float) -> dict:
-    """Human-facing ratios for one batch (or a window of batches)."""
-    if not d or wall_s <= 0 or d.get("run_ms", 0) <= 0:
-        return {}
-    run_s = d["run_ms"] / 1e3
-    return {
-        "core_utilization": round(run_s / (cores * wall_s), 3),
-        "cpu_frac": round(d["cpu_ns"] / 1e9 / run_s, 3),
-        "gc_frac": round(d["gc_ms"] / 1e3 / run_s, 3),
-        "input_GB": round(d["input_bytes"] / 1e9, 2),
-        "shuffle_write_GB": round(d["shuffle_write_bytes"] / 1e9, 3),
-        "spill_GB": round((d["mem_spill_bytes"] + d["disk_spill_bytes"]) / 1e9, 3),
-    }

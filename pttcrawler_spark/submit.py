@@ -13,9 +13,11 @@ YARN/k8s cluster (tests/test_submit.py runs this end-to-end from a scratch
 cwd with the repo stripped from PYTHONPATH, so the zip is the only source of
 the package).
 
-The driver deliberately builds its session with ``SparkSession.builder`` and
-NO master/conf overrides: master, executor sizing, and dynamic allocation
-belong to the spark-submit command line / cluster defaults, not the job.
+The driver builds its session with ``SparkSession.builder`` plus the
+engine's own settings (``session.ENGINE_CONF``: UTC session zone, FAIR pools,
+Arrow, zstd, cleaner GC) and nothing else: master, executor sizing, and
+dynamic allocation belong to the spark-submit command line / cluster
+defaults, not the job.
 """
 
 from __future__ import annotations
@@ -71,9 +73,11 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from pttcrawler_spark.engine import crawl as C
+    from pttcrawler_spark.session import ENGINE_CONF
     from pttcrawler_spark.synth import site as S
 
-    spark = SparkSession.builder.appName("pttcrawler_spark_crawl").getOrCreate()
+    spark = (SparkSession.builder.appName("pttcrawler_spark_crawl")
+             .config(map=ENGINE_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     cfg = S.SiteConfig(**json.loads(args.site))
     if args.corpus:

@@ -1,12 +1,17 @@
-"""The engine's behaviour is set by its arguments, not by the environment:
-no module under pttcrawler_spark/engine/ reads a SPARK_GRAFT_* variable."""
+"""The engine's behaviour is set by its arguments and session.py, not by
+the environment: no module under pttcrawler_spark/ reads a SPARK_GRAFT_*
+variable, and bench.py's crawl worker adds only deployment settings."""
 
 from __future__ import annotations
 
 import ast
+import os
+import tempfile
 from pathlib import Path
 
-ENGINE = Path(__file__).resolve().parent.parent / "pttcrawler_spark" / "engine"
+import pytest
+
+PKG = Path(__file__).resolve().parent.parent / "pttcrawler_spark"
 
 
 def _is_environ(node: ast.AST) -> bool:
@@ -41,9 +46,38 @@ def test_env_reader_finds_reads():
 
 def test_engine_reads_no_spark_graft_env():
     found = [
-        f"{p.name}:{line}: {name}"
-        for p in sorted(ENGINE.glob("*.py"))
+        f"{p.relative_to(PKG)}:{line}: {name}"
+        for p in sorted(PKG.rglob("*.py"))
         for line, name in _env_reads(ast.parse(p.read_text(encoding="utf-8")))
         if name.startswith("SPARK_GRAFT_")
     ]
     assert not found, found
+
+
+class _Stop(Exception):
+    pass
+
+
+def test_bench_worker_passes_only_deployment_conf(monkeypatch, tmp_path):
+    """The scaling bench measures what ships: its crawl worker may place
+    scratch and size the driver, nothing else (no JVM is started)."""
+    import bench
+    from pttcrawler_spark import session
+
+    calls = []
+
+    def record(*args, **kwargs):
+        calls.append(kwargs)
+        raise _Stop
+
+    monkeypatch.setattr(session, "get_spark", record)
+    scratch = bench.SCRATCH or tempfile.gettempdir()
+    before = set(os.listdir(scratch))
+    with pytest.raises(_Stop):
+        bench.crawl_corpus(4, bench.SITE_DEFAULT, str(tmp_path))
+    assert len(calls) == 1
+    assert set(calls[0]["extra_conf"]) <= {"spark.local.dir",
+                                           "spark.driver.memory"}
+    leaked = {n for n in set(os.listdir(scratch)) - before
+              if n.startswith(("spark_local_", "crawl_bench_out_"))}
+    assert not leaked, leaked
