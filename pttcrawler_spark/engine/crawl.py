@@ -54,7 +54,6 @@ from ..functions import parse as FP
 from ..functions import url as FU
 from ..operators import politeness as POL
 from . import state as ST
-from . import taskmetrics as TM
 from . import verify as V
 
 # Storage level for the per-batch HEAVY caches (raw html + image payload
@@ -63,12 +62,14 @@ from . import verify as V
 # they live (all measured on the scaling corpus, 172k-URL steady batches, G1):
 # - in-memory columnar CACHE COMPRESSION on image payload bytes is pure
 #   waste (they are already codec-compressed): cache build 2x slower at
-#   every core count. get_spark leaves it on: no perfbench workload told
-#   spark.sql.inMemoryColumnarStorage.compressed=false apart from noise.
+#   every core count. get_spark leaves it on (no perfbench workload told
+#   spark.sql.inMemoryColumnarStorage.compressed=false apart from noise);
+#   the scaling bench's worker turns it off (bench.WORKER_CONF).
 # - an ADAPTIVE (unbounded) G1 young gen re-copies the GBs of surviving
 #   cache blocks on every young pause: 2.3 s pauses, 50-80 % of task time
 #   in GC at local[32]. A bounded young gen (-XX:G1MaxNewSizePercent=10, a
-#   deployment JVM flag) promotes the blocks once and cuts GC wall ~6x.
+#   deployment JVM flag the scaling bench's worker sets) promotes the
+#   blocks once and cuts GC wall ~6x.
 # - OFF_HEAP (tried as the GC fix before the two findings above) builds
 #   blocks ~2x slower than on-heap uncompressed (an extra serialization
 #   pass into Unsafe buffers) and lost end-to-end once young-gen was
@@ -310,8 +311,6 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
     n_fetched_total = 0
     batches_run = 0
     batch_stats: list[dict] = []
-    # None unless the Spark UI is up (taskmetrics reads its REST API)
-    tm_before = TM.sample(spark)
     verify_fut = None
 
     def _submit_verify(bid: int) -> None:
@@ -676,14 +675,6 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             "wall_s": round(time.perf_counter() - t_batch, 3),
             "phase_s": dict(ph.times),
         }
-        tm_after = TM.sample(spark)
-        d = TM.delta(tm_before, tm_after)
-        if d is not None:
-            stats["task_metrics"] = d
-        # re-arm even when this batch's delta was lost (e.g. the UI
-        # wasn't up for the baseline sample) so later batches meter
-        if tm_after is not None:
-            tm_before = tm_after
         batch_stats.append(stats)
         n_fetched_total += n_rows
 

@@ -5,18 +5,18 @@ more than two throughput numbers — it needs to show WHERE the non-ideal
 fraction goes at the higher level (idle cores? GC? memory stalls?). Spark
 already accounts every task's executorRunTime / executorCpuTime / jvmGcTime
 in the app-status store; this module samples the cumulative totals from the
-UI REST API at batch boundaries so each batch carries a delta:
+UI REST API; the difference of two samples gives, over that window:
 
-  core_utilization = sum(executorRunTime) / (cores * batch_wall)
+  core_utilization = sum(executorRunTime) / (cores * wall)
       < 1 means cores sat idle (driver-side gaps, job launch, stragglers);
   cpu_frac = executorCpuTime / executorRunTime
       < 1 on busy cores means off-CPU time: memory stalls, lock waits, I/O;
   gc_frac = jvmGcTime / executorRunTime.
 
-The crawl samples every batch; a sample is None unless the Spark UI is on
-(spark.ui.enabled, off in session.get_spark), so a session with the UI off
-runs unmetered. Fail-soft: any error also returns None and the crawl
-proceeds unmetered — instrumentation must never fail a run.
+perfbench's traced run samples around the crawl; a sample is None unless
+the Spark UI is on (spark.ui.enabled, off in session.get_spark).
+Fail-soft: any error also returns None and the caller proceeds unmetered —
+instrumentation must never fail a run.
 
 On a real cluster the same numbers come from the history server / metrics
 sink; nothing here is local-mode-specific except the localhost UI URL.
@@ -62,10 +62,3 @@ def sample(spark) -> dict | None:
         return out
     except Exception:
         return None
-
-
-def delta(before: dict | None, after: dict | None) -> dict | None:
-    if before is None or after is None:
-        return None
-    return {k: after[k] - before[k] for k in after}
-

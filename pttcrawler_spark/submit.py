@@ -17,7 +17,9 @@ The driver builds its session with ``SparkSession.builder`` plus the
 engine's own settings (``session.ENGINE_CONF``: UTC session zone, FAIR pools,
 Arrow, zstd, cleaner GC) and nothing else: master, executor sizing, and
 dynamic allocation belong to the spark-submit command line / cluster
-defaults, not the job.
+defaults, not the job. Builder settings win over ``--conf`` and
+spark-defaults, so the ``ENGINE_CONF`` keys cannot be changed from the
+command line; every other key can.
 """
 
 from __future__ import annotations

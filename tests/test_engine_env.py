@@ -1,6 +1,7 @@
 """The engine's behaviour is set by its arguments and session.py, not by
 the environment: no module under pttcrawler_spark/ reads a SPARK_GRAFT_*
-variable, and bench.py's crawl worker adds only deployment settings."""
+variable, and bench.py's crawl worker adds only fixed settings of its own
+(no env knob) to get_spark's."""
 
 from __future__ import annotations
 
@@ -11,7 +12,8 @@ from pathlib import Path
 
 import pytest
 
-PKG = Path(__file__).resolve().parent.parent / "pttcrawler_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "pttcrawler_spark"
 
 
 def _is_environ(node: ast.AST) -> bool:
@@ -54,13 +56,21 @@ def test_engine_reads_no_spark_graft_env():
     assert not found, found
 
 
+def test_bench_reads_only_deployment_env():
+    src = (REPO / "bench.py").read_text(encoding="utf-8")
+    names = {n for _, n in _env_reads(ast.parse(src))
+             if n.startswith("SPARK_GRAFT_")}
+    assert names <= {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS"}, names
+
+
 class _Stop(Exception):
     pass
 
 
 def test_bench_worker_passes_only_deployment_conf(monkeypatch, tmp_path):
-    """The scaling bench measures what ships: its crawl worker may place
-    scratch and size the driver, nothing else (no JVM is started)."""
+    """The crawl worker adds scratch placement, a core-sized driver and its
+    fixed WORKER_CONF to get_spark's settings, nothing else (no JVM is
+    started), and leaves no scratch dir behind when the session fails."""
     import bench
     from pttcrawler_spark import session
 
@@ -76,8 +86,10 @@ def test_bench_worker_passes_only_deployment_conf(monkeypatch, tmp_path):
     with pytest.raises(_Stop):
         bench.crawl_corpus(4, bench.SITE_DEFAULT, str(tmp_path))
     assert len(calls) == 1
-    assert set(calls[0]["extra_conf"]) <= {"spark.local.dir",
-                                           "spark.driver.memory"}
+    conf = dict(calls[0]["extra_conf"])
+    assert conf.pop("spark.driver.memory") == "8g"
+    assert conf.pop("spark.local.dir").startswith(scratch)
+    assert conf == bench.WORKER_CONF
     leaked = {n for n in set(os.listdir(scratch)) - before
               if n.startswith(("spark_local_", "crawl_bench_out_"))}
     assert not leaked, leaked
