@@ -5,11 +5,18 @@ Re-expresses the reference's single-threaded loop (crawler/article.py:419-511
 micro-batch drain over a frontier table:
 
   pending → [robots split → per-host token bucket admit]  (operators/politeness)
-          → [simulated fetch = join corpus] (network I/O stand-in)
+          → [fetch: simulated corpus join | HTTP]  → persist + kind counts
           → bootstrap: getLastPage → seed index rows L..1     (F1)
           → index: parse entries → canonicalize → ANTI-JOIN dedupe → enqueue
           → article: parse fields/pushes/payload → append output tables
           → frontier/politeness/metrics snapshot (engine/state)
+
+The kind counts are the batch's first job, and they decide what the rest
+of it plans: discovery only when a bootstrap or index page was fetched,
+``article_index`` only when an index page was, the article parse and its
+four tables (hence the post-commit verify) only when an article was. The
+frontier checkpoint observes the next batch's pending count, so the loop
+ends without a job of its own.
 
 Ordering is DATA, not task order. Per-host sort key (priority desc,
 discovery_seq asc) with
@@ -47,7 +54,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import parse as FP
@@ -80,9 +87,9 @@ _COMPACT_EVERY = 64                  # full-frontier compaction cadence (batches
 
 
 class _Phase:
-    """Per-batch phase timer; records into ``times`` (surfaced via
-    ``CrawlResult.batch_stats[i]['phase_s']`` — the per-phase scaling
-    evidence in BENCH_SCALING.json)."""
+    """Per-batch phase timer; records into ``times``, surfaced as
+    ``CrawlResult.batch_stats[i]['phase_s']`` (bench.py's per-phase
+    breakdown of the steady batches)."""
 
     def __init__(self) -> None:
         self.t = time.perf_counter()
@@ -103,6 +110,11 @@ FRONTIER_COLS = [
     "board", "board_rank", "page_index", "dom_pos", "priority",
     "discovery_seq", "status", "retry_count", "batch_id",
 ]
+# the page columns a fetch adds to its admitted frontier rows (NULL for a
+# URL the fetch could not get)
+_PAGE_COLS = [("_html", "string"), ("image_bytes", "binary"), ("w", "int"),
+              ("h", "int"), ("fmt", "string"), ("caption", "string"),
+              ("phash", "long")]
 
 
 @dataclass
@@ -153,8 +165,15 @@ class CrawlResult:
         return ST.load_snapshot(self.spark, self.out_dir).frontier
 
     def table(self, name: str, with_batch: bool = False) -> DataFrame | None:
-        return ST.read_table(self.spark, self.out_dir, name,
-                             max_batch=self.final_batch, with_batch=with_batch)
+        """Output table ``name`` over the committed batches; an output table
+        no batch wrote reads as an empty frame of its schema."""
+        df = ST.read_table(self.spark, self.out_dir, name,
+                           max_batch=self.final_batch, with_batch=with_batch)
+        if df is None:
+            df = _empty_table(self.spark, name)
+            if df is not None and with_batch:
+                df = df.withColumn("batch", F.lit(None).cast("int"))
+        return df
 
     def metrics(self) -> DataFrame | None:
         return ST.read_metrics(self.spark, self.out_dir)
@@ -193,33 +212,24 @@ def _frontier_row_cols(df: DataFrame) -> DataFrame:
     """Attach hash/host/salt/priority columns. Input columns: url, kind,
     board, board_rank, page_index, dom_pos, discovery_seq."""
     url = FU.canonicalize(F.col("url"))
-    return (
-        df.withColumn("url", url)
-        .withColumn("url_hash", FU.url_hash64(F.col("url")))
-        .withColumn("url_hash32", FU.url_hash32(F.col("url")))
-        .withColumn("host", FU.host_of(F.col("url")))
-        .withColumn("host_salt", FU.host_salt(F.col("host")))
-        .withColumn("priority", _priority())
-        .withColumn("status", F.lit("pending"))
-        .withColumn("retry_count", F.lit(0))
-        .withColumn("batch_id", F.lit(-1).cast("long"))
-        .select("url", "url_hash", "url_hash32", "host", "host_salt", "kind",
-                "board", "board_rank", "page_index", "dom_pos", "priority",
-                "discovery_seq", "status", "retry_count", "batch_id")
-    )
+    host = FU.host_of(url)
+    return df.select(
+        url.alias("url"), FU.url_hash64(url).alias("url_hash"),
+        FU.url_hash32(url).alias("url_hash32"), host.alias("host"),
+        FU.host_salt(host).alias("host_salt"), "kind", "board", "board_rank",
+        "page_index", "dom_pos", _priority().alias("priority"),
+        "discovery_seq", F.lit("pending").alias("status"),
+        F.lit(0).alias("retry_count"), F.lit(-1).cast("long").alias("batch_id"))
 
 
 def seed_frontier(spark: SparkSession, seeds: list[tuple[str, str]]) -> DataFrame:
     """seeds: [(board, index_html_url)] in crawl order → bootstrap rows."""
     rows = [(board, url, rank) for rank, (board, url) in enumerate(seeds)]
     df = spark.createDataFrame(rows, "board string, url string, board_rank long")
-    df = (
-        df.withColumn("kind", F.lit("bootstrap"))
-        .withColumn("page_index", F.lit(-1))
-        .withColumn("dom_pos", F.lit(-1))
-        .withColumn("discovery_seq", F.lit(0).cast("long"))
-    )
-    return _frontier_row_cols(df)
+    return _frontier_row_cols(df.select(
+        "url", F.lit("bootstrap").alias("kind"), "board", "board_rank",
+        F.lit(-1).alias("page_index"), F.lit(-1).alias("dom_pos"),
+        F.lit(0).cast("long").alias("discovery_seq")))
 
 
 def _seen_filter(cfg: CrawlConfig):
@@ -237,14 +247,153 @@ def _seen_filter(cfg: CrawlConfig):
 
 
 def _init_politeness(hosts: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    return (
-        hosts.select("host").distinct()
-        .withColumn("tokens", F.lit(float(cfg.burst)))
-        .withColumn("last_refill_seq", F.lit(0).cast("long"))
-        .withColumn("delay_s", F.lit(float(cfg.delay_s)))
-        .withColumn("robots_rules", F.lit(None).cast("string"))
-        .withColumn("robots_fetched_seq", F.lit(None).cast("long"))
+    return hosts.select("host").distinct().select(
+        "host", F.lit(float(cfg.burst)).alias("tokens"),
+        F.lit(0).cast("long").alias("last_refill_seq"),
+        F.lit(float(cfg.delay_s)).alias("delay_s"),
+        F.lit(None).cast("string").alias("robots_rules"),
+        F.lit(None).cast("long").alias("robots_fetched_seq"))
+
+
+def _index_entries(ok: DataFrame) -> DataFrame:
+    """Index pages → one row per listed article entry."""
+    idx = ok.where(F.col("kind") == "index")
+    return FP.parse_index_pages(
+        idx.select("url", "board", "board_rank", "page_index",
+                   F.col("_html").alias("html")))
+
+
+def _discover(ok: DataFrame, entries: DataFrame, cfg: CrawlConfig
+              ) -> DataFrame:
+    """A batch's discovered frontier rows, one per URL: each bootstrap
+    page's descending index range (F1) and each index entry's article."""
+    boot = ok.where(F.col("kind") == "bootstrap")
+    new_index = (
+        boot.select("board", "board_rank", "url",
+                    FP.last_page(F.col("_html")).alias("last"))
+        .withColumn("_hi", F.least(F.col("last"), F.lit(cfg.end_index))
+                    if cfg.end_index is not None else F.col("last"))
+        .select("board", "board_rank", "url",
+                F.explode(F.when(
+                    F.col("_hi") >= cfg.start_index,
+                    F.sequence(F.lit(cfg.start_index), F.col("_hi")))
+                    .otherwise(F.array().cast("array<int>")))
+                .alias("page_index"))
+        .select(
+            F.concat(
+                F.regexp_extract(F.col("url"), r"^(.*/)index\.html$", 1),
+                F.format_string("index%d.html", F.col("page_index")),
+            ).alias("url"),
+            F.lit("index").alias("kind"), "board", "board_rank", "page_index",
+            F.lit(-1).alias("dom_pos"), F.lit(0).cast("long").alias("discovery_seq"),
+        )
     )
+    candidates = entries.select(
+        FU.join_url(F.col("url"), F.col("href")).alias("url"),
+        F.lit("article").alias("kind"), "board", "board_rank", "page_index",
+        "dom_pos", F.col("dom_pos").cast("long").alias("discovery_seq"),
+    )
+    rows = _frontier_row_cols(candidates.unionByName(new_index))
+    # dedupe within the batch (same URL discovered twice), deterministic
+    w_url = Window.partitionBy("url").orderBy(
+        F.col("priority").desc(), F.col("discovery_seq").asc())
+    return (rows.withColumn("_rn", F.row_number().over(w_url))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
+def _article_index(entries: DataFrame) -> DataFrame:
+    return entries.select(F.col("entry_web_id").alias("web_id"), "board",
+                          F.col("page_index").alias("index"))
+
+
+def _articles(ok: DataFrame) -> DataFrame:
+    return ok.where(F.col("kind") == "article").withColumn(
+        "web_id", FP.web_id_of(F.col("url")))
+
+
+def _parse_articles(art: DataFrame) -> DataFrame:
+    """SINGLE-PASS parse: the multi-KB html column is the batch's dominant
+    byte/CPU stream; articles+pushes+errors+verify-caption are all
+    extracted in ONE scan whose narrow result the loop persists, so each
+    downstream table write reads parsed fields, never raw pages. Measured
+    at local[32]: the split-consumer version re-streamed the cached html
+    3-4x/batch."""
+    return FP.parse_article_pages(
+        art.select("web_id", "board", "page_index", "dom_pos", "url",
+                   F.col("_html").alias("html")))
+
+
+def _article_tables(art: DataFrame, parsed_all: DataFrame,
+                    start_date: _dt.datetime | None
+                    ) -> tuple[dict[str, DataFrame], DataFrame | None]:
+    """The four article output tables from the single-pass parse, plus the
+    per-board stop pages of the start-date cutoff (None without one)."""
+    # F7: unparseable pages (PostException analog) become status rows
+    # in parse_errors; everything downstream sees only parse-ok pages
+    # (the reference's per-article try/except skip,
+    # crawler/article.py:472-483)
+    parse_errors = parsed_all.where(F.col("parse_error").isNotNull()).select(
+        "web_id", "board", "url", F.col("parse_error").alias("error"))
+    parsed_ok = parsed_all.where(F.col("parse_error").isNull())
+    # P4: start-date cutoff + early stop (crawler/article.py:486-503).
+    # Unparseable dates drop silently; a parseable date BELOW the cutoff
+    # both drops the article and stops that board's crawl at this page
+    # (the loop cancels the pending lower pages).
+    stop_pages = None
+    if start_date is not None:
+        dt_ok = F.col("post_datetime").isNotNull()
+        cut = F.lit(start_date)
+        stop_pages = (parsed_ok
+                      .where(dt_ok & (F.col("post_datetime") < cut))
+                      .groupBy("board")
+                      .agg(F.min("page_index").alias("_stop_page")))
+        parsed_ok = parsed_ok.where(dt_ok & (F.col("post_datetime") >= cut))
+    # images read the binary column from the fetched cache; the
+    # parse-ok + date-kept row set arrives as a BROADCAST join against
+    # the narrow parsed frame's web_ids, not an html re-scan
+    kept = F.broadcast(parsed_ok.select(F.col("web_id").alias("image_id")))
+    images = (art.where(F.col("image_bytes").isNotNull())
+              .select(F.col("web_id").alias("image_id"),
+                      F.col("image_bytes").alias("bytes"),
+                      "w", "h", "fmt", "caption", "phash")
+              .join(kept, "image_id"))
+    return {
+        "parsed_articles": parsed_ok.drop(
+            "parse_error", "pushes", "expected_caption", "url"),
+        "parsed_pushes": FP.pushes_from_parsed(parsed_ok),
+        "images": images,
+        "parse_errors": parse_errors,
+    }, stop_pages
+
+
+def _cancel(df: DataFrame, stop_pages: DataFrame) -> DataFrame:
+    """Early stop: cancel the pending rows of each stopped board below its
+    stop page."""
+    return (
+        df.join(F.broadcast(stop_pages), "board", "left")
+        .withColumn(
+            "status",
+            F.when((F.col("status") == "pending")
+                   & F.col("_stop_page").isNotNull()
+                   & (F.col("page_index") < F.col("_stop_page")),
+                   F.lit("cancelled"))
+            .otherwise(F.col("status")))
+        .drop("_stop_page")
+    )
+
+
+def _empty_table(spark: SparkSession, name: str) -> DataFrame | None:
+    """An empty frame with output table ``name``'s schema. A batch writes
+    only the tables of the page kinds it fetched, so a crawl that never
+    fetched an article (or an index page) has no such dir to read."""
+    if name == "payload_verify":
+        return spark.createDataFrame([], V.VERIFY_DDL)
+    pages = seed_frontier(spark, []).select(
+        "*", *[F.lit(None).cast(t).alias(c) for c, t in _PAGE_COLS])
+    if name == "article_index":
+        return _article_index(_index_entries(pages))
+    art = _articles(pages)
+    return _article_tables(art, _parse_articles(art), None)[0].get(name)
 
 
 def crawl(spark: SparkSession, corpus: DataFrame | None,
@@ -329,16 +478,16 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
     # with the commit writes and the previous batch's verify (pool
     # "commit", engine/state.py and engine/verify.py)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
-    while batches_run < cfg.max_batches:
+    # the one explicit pending check: no checkpoint has counted this
+    # (seeded or resumed) frontier yet; every later batch's frontier
+    # checkpoint observes its own pending count
+    has_pending = not frontier.where(F.col("status") == "pending").isEmpty()
+    while has_pending and batches_run < cfg.max_batches:
         batches_run += 1
         batch_id += 1
         t_batch = time.perf_counter()
         ph = _Phase()
         pending = frontier.where(F.col("status") == "pending")
-        if pending.isEmpty():
-            batch_id -= 1
-            break
-
         politeness = POL.refill(politeness, cfg.batch_seconds, cfg.burst)
         blocked = None
         if cfg.robots:
@@ -396,119 +545,67 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 .join(F.broadcast(adm), ["url", "_page_kind"])
                 .drop("_page_kind"))
             missing = admitted.join(pages_b.select("url"), "url", "left_anti")
-            for c, typ in [("_html", "string"), ("image_bytes", "binary"),
-                           ("w", "int"), ("h", "int"), ("fmt", "string"),
-                           ("caption", "string"), ("phash", "long")]:
-                missing = missing.withColumn(c, F.lit(None).cast(typ))
+            missing = missing.select(
+                "*", *[F.lit(None).cast(t).alias(c) for c, t in _PAGE_COLS])
             fetched = matched.unionByName(missing).persist(_HEAVY_CACHE)
-        ph.mark("admit+fetch(lazy)")
+        # materialize the batch ONCE, before anything else is planned: this
+        # kind-count collect is the batch's single full pass over `fetched`
+        # (the corpus scan / network fetch), and its per-kind OK counts
+        # decide which of the stages below the batch needs at all — an
+        # index batch plans no article parse or article-table writes, an
+        # article batch no discovery. The pass must also COMPLETE before
+        # the parallel commit writes are submitted: concurrent jobs over a
+        # still-lazy persist each race to compute the missing partitions,
+        # re-scanning the corpus up to once per job (measured on the 2.7 GB
+        # scaling corpus: 9 concurrent writes turned a 256-URL bootstrap
+        # batch into 60 s of redundant scans; with the pass completed first
+        # the same batch is ~2 s).
+        kc = {r["kind"]: (r["cnt"], r["n_fail"]) for r in (
+            fetched.groupBy("kind")
+            .agg(F.count("*").alias("cnt"),
+                 F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0))
+                 .alias("n_fail"))
+            .collect())}
+        n_ok = {k: cnt - n_fail for k, (cnt, n_fail) in kc.items()}
+        ph.mark("admit+fetch (kind counts)")
 
         ok = fetched.where(F.col("_html").isNotNull())
+        tables: dict[str, DataFrame] = {}
+        pre_anti = new_rows = None
+        if n_ok.get("bootstrap") or n_ok.get("index"):
+            entries = _index_entries(ok)
+            pre_anti = _discover(ok, entries, cfg).persist()
+            # URL-seen: bloom pre-filter (scale path) + exact anti-join (truth)
+            if bloom is not None:
+                maybe_seen, definitely_new = bloom.split(pre_anti)
+                verified_new = maybe_seen.join(frontier.select("url"), "url", "left_anti")
+                new_rows = definitely_new.unionByName(verified_new)
+            else:
+                new_rows = pre_anti.join(frontier.select("url"), "url", "left_anti")
+            # materialize discovery once (the count also fills pre_anti's
+            # cache): the checkpoints, the delta, politeness and metrics
+            # writes all read it concurrently, and racing a lazy persist
+            # would re-run the index parse and anti-join once per job
+            new_rows = new_rows.persist()
+            new_rows.count()
+            if n_ok.get("index"):
+                tables["article_index"] = _article_index(entries)
+        ph.mark("discover")
 
-        # --- bootstrap → seed the descending index range (F1) --------------
-        boot = ok.where(F.col("kind") == "bootstrap")
-        new_index = (
-            boot.select("board", "board_rank", "url",
-                        FP.last_page(F.col("_html")).alias("last"))
-            .withColumn("_hi", F.least(F.col("last"), F.lit(cfg.end_index))
-                        if cfg.end_index is not None else F.col("last"))
-            .select("board", "board_rank", "url",
-                    F.explode(F.when(
-                        F.col("_hi") >= cfg.start_index,
-                        F.sequence(F.lit(cfg.start_index), F.col("_hi")))
-                        .otherwise(F.array().cast("array<int>")))
-                    .alias("page_index"))
-            .select(
-                F.concat(
-                    F.regexp_extract(F.col("url"), r"^(.*/)index\.html$", 1),
-                    F.format_string("index%d.html", F.col("page_index")),
-                ).alias("url"),
-                F.lit("index").alias("kind"), "board", "board_rank", "page_index",
-                F.lit(-1).alias("dom_pos"), F.lit(0).cast("long").alias("discovery_seq"),
-            )
-        )
-
-        # --- index pages → entries → candidate article URLs (J2 dedupe) ----
-        idx = ok.where(F.col("kind") == "index")
-        entries = FP.parse_index_pages(
-            idx.select("url", "board", "board_rank", "page_index",
-                       F.col("_html").alias("html")))
-        candidates = entries.select(
-            FU.join_url(F.col("url"), F.col("href")).alias("url"),
-            F.lit("article").alias("kind"), "board", "board_rank", "page_index",
-            "dom_pos", F.col("dom_pos").cast("long").alias("discovery_seq"),
-        )
-        pre_anti = _frontier_row_cols(candidates.unionByName(new_index))
-        # dedupe within the batch (same URL discovered twice), deterministic
-        w_url = Window.partitionBy("url").orderBy(
-            F.col("priority").desc(), F.col("discovery_seq").asc())
-        pre_anti = (
-            pre_anti.withColumn("_rn", F.row_number().over(w_url))
-            .where(F.col("_rn") == 1).drop("_rn")
-        )
-        # URL-seen: bloom pre-filter (scale path) + exact anti-join (truth)
-        if bloom is not None:
-            maybe_seen, definitely_new = bloom.split(pre_anti)
-            verified_new = maybe_seen.join(frontier.select("url"), "url", "left_anti")
-            new_rows = definitely_new.unionByName(verified_new)
-        else:
-            new_rows = pre_anti.join(frontier.select("url"), "url", "left_anti")
-        new_rows = new_rows.persist()
-        ph.mark("discover(lazy)")
-
-        # --- article pages → parsed outputs ---------------------------------
-        # SINGLE-PASS parse: the multi-KB html column is the batch's dominant
-        # byte/CPU stream; articles+pushes+errors+verify-caption are all
-        # extracted in ONE scan whose narrow result is persisted (materialized
-        # below, before the parallel commit writes), so each downstream table
-        # write reads parsed fields, never raw pages. Measured at local[32]:
-        # the split-consumer version re-streamed the cached html 3-4x/batch.
-        tables: dict = {}
-        art = ok.where(F.col("kind") == "article").withColumn(
-            "web_id", FP.web_id_of(F.col("url")))
-        parsed_all = FP.parse_article_pages(
-            art.select("web_id", "board", "page_index", "dom_pos", "url",
-                       F.col("_html").alias("html"))).persist(_HEAVY_CACHE)
-        # F7: unparseable pages (PostException analog) become status rows
-        # in parse_errors; everything downstream sees only parse-ok pages
-        # (the reference's per-article try/except skip,
-        # crawler/article.py:472-483)
-        parse_errors = parsed_all.where(F.col("parse_error").isNotNull()).select(
-            "web_id", "board", "url", F.col("parse_error").alias("error"))
-        parsed_ok = parsed_all.where(F.col("parse_error").isNull())
-        # P4: start-date cutoff + early stop (crawler/article.py:486-503).
-        # Unparseable dates drop silently; a parseable date BELOW the cutoff
-        # both drops the article and stops that board's crawl at this page
-        # (pending lower pages are cancelled below).
-        stop_pages = None
-        if cfg.start_date is not None:
-            dt_ok = F.col("post_datetime").isNotNull()
-            cut = F.lit(cfg.start_date)
-            stop_pages = (parsed_ok
-                          .where(dt_ok & (F.col("post_datetime") < cut))
-                          .groupBy("board")
-                          .agg(F.min("page_index").alias("_stop_page")))
-            parsed_ok = parsed_ok.where(dt_ok & (F.col("post_datetime") >= cut))
-        parsed_articles = parsed_ok.drop(
-            "parse_error", "pushes", "expected_caption", "url")
-        parsed_pushes = FP.pushes_from_parsed(parsed_ok)
-        # images read the binary column from the fetched cache; the
-        # parse-ok + date-kept row set arrives as a BROADCAST join against
-        # the narrow parsed frame's web_ids, not an html re-scan
-        kept = F.broadcast(parsed_ok.select(F.col("web_id").alias("image_id")))
-        images = (art.where(F.col("image_bytes").isNotNull())
-                  .select(F.col("web_id").alias("image_id"),
-                          F.col("image_bytes").alias("bytes"),
-                          "w", "h", "fmt", "caption", "phash")
-                  .join(kept, "image_id"))
-        tables["parsed_articles"] = parsed_articles
-        tables["parsed_pushes"] = parsed_pushes
-        tables["images"] = images
-        tables["parse_errors"] = parse_errors
-        article_index = entries.select(
-            F.col("entry_web_id").alias("web_id"), "board",
-            F.col("page_index").alias("index"))
-        tables["article_index"] = article_index
+        parsed_all = stop_pages = None
+        if n_ok.get("article"):
+            art = _articles(ok)
+            parsed_all = _parse_articles(art).persist(_HEAVY_CACHE)
+            art_tables, stop_pages = _article_tables(art, parsed_all,
+                                                     cfg.start_date)
+            tables.update(art_tables)
+            # materialize the single-pass parse BEFORE the parallel commit
+            # writes for the same reason as the kind counts: concurrent jobs
+            # over a lazy persist race to compute missing partitions,
+            # re-running the parse once per consumer. One count = one parse
+            # pass, then every write job reads the narrow cached result.
+            parsed_all.count()
+        ph.mark("parse articles (single-pass)")
 
         # --- frontier DELTA (merge-on-read): O(changes) rows, not O(|frontier|)
         status_override = [
@@ -525,31 +622,18 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 *[F.lit("failed").alias("status") if c == "status" else
                   F.lit(batch_id).cast("long").alias("batch_id")
                   if c == "batch_id" else c for c in FRONTIER_COLS]))
-        delta_new = new_rows.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        delta = changed
+        if new_rows is not None:
+            delta_new = new_rows.withColumn("batch_id", F.lit(batch_id).cast("long"))
+            if stop_pages is not None:
+                delta_new = _cancel(delta_new, stop_pages)
+            delta = delta.unionByName(delta_new.select(*FRONTIER_COLS))
         if stop_pages is not None:
-            # early stop: cancel this board's not-yet-fetched lower pages —
-            # both freshly discovered rows and older deferred pending rows
-            def _cancel(df: DataFrame) -> DataFrame:
-                return (
-                    df.join(F.broadcast(stop_pages), "board", "left")
-                    .withColumn(
-                        "status",
-                        F.when((F.col("status") == "pending")
-                               & F.col("_stop_page").isNotNull()
-                               & (F.col("page_index") < F.col("_stop_page")),
-                               F.lit("cancelled"))
-                        .otherwise(F.col("status")))
-                    .drop("_stop_page")
-                )
-
-            delta_new = _cancel(delta_new)
+            # early stop also cancels this board's older deferred rows
             cancelled_old = (
-                _cancel(marked.where(~F.col("admit")).drop("admit"))
+                _cancel(marked.where(~F.col("admit")).drop("admit"), stop_pages)
                 .where(F.col("status") == "cancelled"))
-            delta = (changed.unionByName(delta_new.select(*FRONTIER_COLS))
-                     .unionByName(cancelled_old.select(*FRONTIER_COLS)))
-        else:
-            delta = changed.unionByName(delta_new.select(*FRONTIER_COLS))
+            delta = delta.unionByName(cancelled_old.select(*FRONTIER_COLS))
 
         # next frontier = merge(delta over current) — the SAME latest-wins
         # semantics state.load_frontier replays from the delta files, so the
@@ -561,22 +645,8 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
 
         n_admitted = admitted.groupBy("host").agg(F.count("*").alias("n_admitted"))
         politeness_next = POL.spend(politeness, n_admitted)
-        politeness_next = politeness_next.unionByName(
-            _init_politeness(new_rows.join(politeness.select("host"), "host", "left_anti"), cfg)
-        ).groupBy("host").agg(
-            F.max("tokens").alias("tokens"),
-            F.max("last_refill_seq").alias("last_refill_seq"),
-            F.max("delay_s").alias("delay_s"),
-            F.max("robots_rules").alias("robots_rules"),
-            F.max("robots_fetched_seq").alias("robots_fetched_seq"),
-        )
-
         deferred = marked.where(~F.col("admit")).groupBy("host").agg(
             F.count("*").alias("_deferred"))
-        # per-partition lineage: deduped = discovered-this-batch minus
-        # actually-new, PER HOST (north rule: per-partition lineage/metrics)
-        cand_cnt = pre_anti.groupBy("host").agg(F.count("*").alias("_cand"))
-        new_cnt = new_rows.groupBy("host").agg(F.count("*").alias("_new"))
         metrics = (
             changed.groupBy("host", "host_salt")
             .agg(
@@ -584,56 +654,52 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
             )
             .join(deferred, "host", "left")
-            .join(cand_cnt, "host", "left")
-            .join(new_cnt, "host", "left")
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("partition_id", F.col("host_salt"))
-            .withColumn("deduped",
-                        (F.coalesce(F.col("_cand"), F.lit(0))
-                         - F.coalesce(F.col("_new"), F.lit(0))).cast("long"))
-            .withColumn("deferred", F.coalesce(F.col("_deferred"), F.lit(0)).cast("long"))
-            .select("batch_id", "partition_id", "host", "fetched", "deduped",
-                    "deferred", "failed")
         )
+        deduped = F.lit(0)
+        if new_rows is not None:
+            # newly seen hosts join with a full bucket; the groupBy keeps
+            # the state's partition count from growing batch over batch
+            grown = politeness_next.unionByName(_init_politeness(
+                new_rows.join(politeness.select("host"), "host", "left_anti"), cfg))
+            politeness_next = grown.groupBy("host").agg(
+                *[F.max(c).alias(c) for c in grown.columns if c != "host"])
+            # per-partition lineage: deduped = discovered-this-batch minus
+            # actually-new, PER HOST (north rule: per-partition lineage/metrics)
+            metrics = (
+                metrics
+                .join(pre_anti.groupBy("host").agg(F.count("*").alias("_cand")),
+                      "host", "left")
+                .join(new_rows.groupBy("host").agg(F.count("*").alias("_new")),
+                      "host", "left"))
+            deduped = (F.coalesce(F.col("_cand"), F.lit(0))
+                       - F.coalesce(F.col("_new"), F.lit(0)))
+        metrics = metrics.select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col("host_salt").alias("partition_id"), "host", "fetched",
+            deduped.cast("long").alias("deduped"),
+            F.coalesce(F.col("_deferred"), F.lit(0)).cast("long").alias("deferred"),
+            "failed")
 
         if bloom is not None:
-            bloom.add(new_rows.select("url_hash"))
+            if new_rows is not None:
+                bloom.add(new_rows.select("url_hash"))
             bloom.save(out_dir, batch_id)
 
         ph.mark("plan frontier/politeness/metrics")
-        # materialize the batch ONCE: this kind-count collect is the batch's
-        # single full pass over `fetched` (the corpus scan / network fetch).
-        # It must COMPLETE before the parallel commit writes are submitted —
-        # concurrent jobs over a still-lazy persist each race to compute the
-        # missing partitions, re-scanning the corpus up to once per job
-        # (measured on the 2.7 GB scaling corpus: 9 concurrent writes turned
-        # a 256-URL bootstrap batch into 60 s of redundant scans; with the
-        # pass completed first the same batch is ~2 s).
-        kc = {r["kind"]: (r["cnt"], r["n_fail"]) for r in (
-            fetched.groupBy("kind")
-            .agg(F.count("*").alias("cnt"),
-                 F.sum(F.when(F.col("_html").isNull(), 1).otherwise(0))
-                 .alias("n_fail"))
-            .collect())}
-        ph.mark("materialize fetched (kind counts)")
-        # materialize the single-pass parse BEFORE the parallel commit
-        # writes for the same reason as above: concurrent jobs over a lazy
-        # persist race to compute missing partitions, re-running the parse
-        # once per consumer. One count = one parse pass, then every write
-        # job reads the narrow cached result.
-        parsed_all.count()
-        ph.mark("materialize parsed (single-pass)")
         # lineage break WITHOUT a parquet round-trip: the checkpointed
         # frontier/politeness live in executor block storage; the next batch
         # plans against a compact leaf, and plan depth stays O(1) in batch
         # count. (Reliable checkpoint dir on a real cluster.) The explicit
         # repartition pins the partition count — a bare anti-join ∪ delta
         # union would ADD the delta's partitions to the frontier's every
-        # batch, growing task counts without bound. The checkpoint jobs run
+        # batch, growing task counts without bound. The frontier checkpoint
+        # also observes the next batch's pending count, so the loop needs no
+        # job of its own to know whether to go on. The checkpoint jobs run
         # CONCURRENTLY with the commit writes (safe now that `fetched` is
         # fully materialized — every job reads the cache, nothing races to
         # recompute it), so their wall time hides behind the write jobs.
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        pending_next = Observation()
 
         def _in_loop_pool(fn):
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
@@ -643,6 +709,8 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
             fut_frontier = ckpt_pool.submit(
                 _in_loop_pool,
                 lambda: frontier_next.repartition(n_shuffle, "url")
+                .observe(pending_next, F.count_if(F.col("status") == "pending")
+                         .alias("n"))
                 .localCheckpoint(eager=True))
             fut_politeness = ckpt_pool.submit(
                 _in_loop_pool,
@@ -659,8 +727,10 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                             frontier_delta=None if full_due else delta)
         frontier = fut_frontier.result()
         politeness = fut_politeness.result()
-        for df in (fetched, parsed_all, new_rows, marked):
-            df.unpersist()
+        has_pending = pending_next.get["n"] > 0
+        for df in (fetched, parsed_all, pre_anti, new_rows, marked):
+            if df is not None:
+                df.unpersist()
         # batch N durably committed → its verify runs while batch N+1
         # computes (reads the committed parquet, pins no cache)
         _submit_verify(batch_id)
@@ -669,9 +739,9 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         stats = {
             "batch_id": batch_id,
             "fetched": n_rows,
-            "bootstrap": kc.get("bootstrap", (0, 0))[0] - kc.get("bootstrap", (0, 0))[1],
-            "index": kc.get("index", (0, 0))[0] - kc.get("index", (0, 0))[1],
-            "article": kc.get("article", (0, 0))[0] - kc.get("article", (0, 0))[1],
+            "bootstrap": n_ok.get("bootstrap", 0),
+            "index": n_ok.get("index", 0),
+            "article": n_ok.get("article", 0),
             "wall_s": round(time.perf_counter() - t_batch, 3),
             "phase_s": dict(ph.times),
         }

@@ -86,13 +86,11 @@ def release_lock(lock_path: Path) -> None:
 
 
 def _sized(df: DataFrame) -> DataFrame:
-    """AQE-sized write: the REBALANCE hint inserts a shuffle whose output
-    partitions AQE coalesces/splits to the advisory size, so file count
-    tracks data size — one file for a 256-row politeness table now, ~64 MB
-    files for a 10^10-row frontier on a cluster. Without this every tiny
-    state write emits `shuffle.partitions` near-empty files, and the
-    per-file open/footer/codec cost dominates the batch (measured: ~3 s of
-    a 7 s steady batch at local[32])."""
+    """AQE-sized write for a FULL frontier compaction: the REBALANCE hint
+    inserts a shuffle whose output partitions AQE coalesces/splits to the
+    advisory size, so file count tracks data size — ~64 MB files for a
+    10^10-row frontier on a cluster, which a coalesce to one file per core
+    could not SPLIT into. The O(batch) writes skip it (commit_batch)."""
     return df.hint("rebalance")
 
 
@@ -129,65 +127,51 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
     marker = d / "_COMMIT.json"
     if marker.exists():
         marker.unlink()
-    # state tables are small → REBALANCE into size-appropriate files.
-    # Output tables (image payloads!) keep their natural partitioning from
-    # the fetch scan — a rebalance would shuffle every image byte a second
-    # time — and binary-column tables are written UNCOMPRESSED (see the
-    # measured numbers in _write below).
-    jobs: list[tuple[str, DataFrame, bool]] = [
-        (str(d / "politeness"), politeness, True),
-    ]
-    if frontier is not None:          # full snapshot = compaction point
-        jobs.append((str(d / "frontier"), frontier, True))
-    if frontier_delta is not None:    # merge-on-read delta, O(batch) rows
-        jobs.append((str(d / "frontier_delta"), frontier_delta, True))
     if frontier is None and frontier_delta is None:
         raise ValueError("commit_batch needs a frontier or a frontier_delta")
-    if metrics is not None:
-        jobs.append((str(d / "metrics"), metrics, True))
+    # Every O(batch) write — the small state tables and the output tables —
+    # COALESCES to at most one file per core (shuffle-free; the upstream
+    # stage still runs core-wide): the natural partitioning inherits the
+    # fetch scan's fine splits (~240 per steady batch) and per-file
+    # open/footer cost dominates these sub-second writes — measured at
+    # local[32] on an 860k-row narrow table: natural 240 files 1.0-2.5 s,
+    # rebalance 1.1-1.6 s (adds a shuffle barrier), coalesce(32)
+    # 0.3-0.4 s. Only a full frontier compaction must also SPLIT (a
+    # 10^10-row frontier needs more files than cores), so it alone keeps
+    # the AQE-sized REBALANCE path.
+    par = politeness.sparkSession.sparkContext.defaultParallelism
+    small = {"politeness": politeness, "frontier_delta": frontier_delta,
+             "metrics": metrics}
+    jobs: list[tuple[str, DataFrame, dict[str, str]]] = [
+        (str(d / name), df.coalesce(par), {})
+        for name, df in small.items() if df is not None]
+    if frontier is not None:          # full snapshot = compaction point
+        jobs.append((str(d / "frontier"), _sized(frontier), {}))
     for name, df in (tables or {}).items():
-        jobs.append((str(Path(out_dir) / TABLES / name / f"batch={batch_id}"), df, False))
-
-    def _write(item: tuple[str, DataFrame, bool]) -> None:
-        path, df, is_state = item
-        # commit writes run in their own FAIR pool so the crawl loop's
-        # next-batch jobs (pool "loop") share executors with them instead
-        # of queueing behind 30-45 s of payload writes (session.py conf)
-        df.sparkSession.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "commit")
-        # output tables COALESCE to ~one file per core (shuffle-free; the
-        # upstream stage still runs core-wide): the natural partitioning
-        # inherits the fetch scan's fine splits (~240 per steady batch) and
-        # per-file open/footer cost dominates these sub-second writes —
-        # measured at local[32] on an 860k-row narrow table: natural 240
-        # files 1.0-2.5 s, rebalance 1.1-1.6 s (adds a shuffle barrier),
-        # coalesce(32) 0.3-0.4 s. State tables keep the REBALANCE path:
-        # they must also SPLIT (a 10^10-row frontier compaction needs more
-        # files than cores) and AQE sizes those shuffles well.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if is_state:
-            _sized(df).write.mode("overwrite").parquet(path)
-        elif any(t == "binary" for _, t in df.dtypes):
+        if any(t == "binary" for _, t in df.dtypes):
             # payload-bytes tables (images): the blobs are ALREADY
             # codec-compressed, so page compression and dictionary encoding
             # burn CPU for exactly zero size win — measured on a 196k-row
             # 2.1 GB steady batch at local[32]: snappy+dict 20.3 s,
             # snappy+nodict 18.2 s, none+nodict 1.8 s, ALL 2.1 GB on disk.
-            # This was the single largest slice of the commit tail.
-            # COALESCE (shuffle-free partition merge) to ~one file per core:
-            # the natural partitioning inherits the fetch scan's fine splits
-            # (16 MB ⇒ ~240 files of ~9 MB per steady batch) and per-file
-            # open/footer cost dominates — measured on the same 2.1 GB batch
-            # at local[32]: 240 files 2.6-3.3 s, coalesce(32) 0.7-1.2 s
-            # (~66 MB files, the size a 1000-executor cluster wants too);
-            # a REBALANCE would shuffle every payload byte a second time
-            # (measured 2.9-7.5 s — strictly worse).
-            (df.coalesce(par).write.mode("overwrite")
-             .option("compression", "none")
-             .option("parquet.enable.dictionary", "false").parquet(path))
+            # This was the single largest slice of the commit tail. At the
+            # same batch the coalesce gave ~66 MB files (240 files 2.6-3.3 s,
+            # coalesce(32) 0.7-1.2 s); a REBALANCE would shuffle every
+            # payload byte a second time (measured 2.9-7.5 s).
+            opts = {"compression": "none", "parquet.enable.dictionary": "false"}
         else:
-            (df.coalesce(par).write.mode("overwrite")
-             .option("compression", "snappy").parquet(path))
+            opts = {"compression": "snappy"}
+        jobs.append((str(Path(out_dir) / TABLES / name / f"batch={batch_id}"),
+                     df.coalesce(par), opts))
+
+    def _write(item: tuple[str, DataFrame, dict[str, str]]) -> None:
+        path, df, opts = item
+        # commit writes run in their own FAIR pool so the crawl loop's
+        # next-batch jobs (pool "loop") share executors with them instead
+        # of queueing behind 30-45 s of payload writes (session.py conf)
+        df.sparkSession.sparkContext.setLocalProperty(
+            "spark.scheduler.pool", "commit")
+        df.write.mode("overwrite").options(**opts).parquet(path)
 
     with ThreadPoolExecutor(max_workers=min(8, len(jobs))) as ex:
         list(ex.map(_write, jobs))  # list() re-raises the first failure

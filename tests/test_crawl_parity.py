@@ -323,3 +323,83 @@ def test_kill_between_admit_and_commit_never_double_admits(
                 f"host {host} over budget at batch {b}: {n}")
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_crawl_without_articles_builds_empty_store(spark):
+    """A crawl that fetches no article (its index range starts past every
+    board's last page) reads its article tables as empty frames, and the
+    relational store builds from them."""
+    from pttcrawler_spark.engine import store as S
+
+    cfg1 = SiteConfig(n_boards=2, pages_per_board=1, articles_per_page=4)
+    corpus = spark.createDataFrame(generate_site_pandas(cfg1))
+    out = tempfile.mkdtemp(prefix="crawl_noart_")
+    try:
+        res = C.crawl(spark, corpus, _seeds(cfg1), out,
+                      C.CrawlConfig(start_index=99))
+        assert sum(b["article"] for b in res.batch_stats) == 0
+        for name in ("parsed_articles", "parsed_pushes", "images"):
+            t = res.table(name)
+            assert t is not None and t.count() == 0, name
+        rel = S.build_relational(res)
+        assert rel["board"].count() == 2
+        assert rel["article"].count() == 0
+        assert rel["push"].count() == 0
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_batch_layout_follows_fetched_kinds(spark, crawled):
+    """A batch writes only the tables of the page kinds it fetched: no
+    article table or payload_verify dir for a bootstrap or index batch, no
+    article_index dir for an article-only batch. Its small state tables
+    hold at most one data file per core."""
+    import pathlib
+
+    root = pathlib.Path(crawled.out_dir)
+    fr = (crawled.frontier().where(F.col("status").isin("fetched", "failed"))
+          .select("batch_id", "kind").toPandas())
+    kinds = {b: set(g.kind) for b, g in fr.groupby("batch_id")}
+    assert {"bootstrap"} in kinds.values()
+    assert {"index"} in kinds.values()
+    assert {"article"} in kinds.values()
+    art_tables = {"parsed_articles", "parsed_pushes", "images",
+                  "parse_errors", "payload_verify"}
+    for b, ks in kinds.items():
+        written = {p.parent.name for p in
+                   (root / "tables").glob(f"*/batch={b}")}
+        if "article" not in ks:
+            assert not written & art_tables, (b, ks, written)
+        else:
+            assert art_tables <= written, (b, ks, written)
+        if ks == {"article"}:
+            assert "article_index" not in written, (b, written)
+    par = spark.sparkContext.defaultParallelism
+    for d in (root / "state").glob("batch=*"):
+        for name in ("politeness", "frontier_delta", "metrics"):
+            if (d / name).exists():
+                assert len(list((d / name).glob("part-*"))) <= par, d / name
+
+
+def test_loop_stops_at_drained_frontier(spark, site_cfg, corpus_pdf, crawled):
+    """The crawl ends with the batch that drains the frontier (five batches
+    on this site), and resuming a drained store runs no batch: the same
+    final_batch, and no new state dir."""
+    import pathlib
+
+    assert crawled.final_batch == 4
+    assert len(crawled.batch_stats) == 5
+    out = tempfile.mkdtemp(prefix="crawl_drained_")
+    try:
+        shutil.copytree(crawled.out_dir, out, dirs_exist_ok=True)
+        state = pathlib.Path(out) / "state"
+        before = sorted(p.name for p in state.iterdir())
+        res = C.crawl(spark, spark.createDataFrame(corpus_pdf),
+                      _seeds(site_cfg), out,
+                      C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
+                      resume=True)
+        assert res.final_batch == crawled.final_batch
+        assert res.batch_stats == [] and res.n_fetched == 0
+        assert sorted(p.name for p in state.iterdir()) == before
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
