@@ -386,8 +386,6 @@ def _empty_table(spark: SparkSession, name: str) -> DataFrame | None:
     """An empty frame with output table ``name``'s schema. A batch writes
     only the tables of the page kinds it fetched, so a crawl that never
     fetched an article (or an index page) has no such dir to read."""
-    if name == "payload_verify":
-        return spark.createDataFrame([], V.VERIFY_DDL)
     pages = seed_frontier(spark, []).select(
         "*", *[F.lit(None).cast(t).alias(c) for c, t in _PAGE_COLS])
     if name == "article_index":

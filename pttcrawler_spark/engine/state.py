@@ -5,9 +5,12 @@ contract at the Parquet level: each micro-batch writes a snapshot directory
 ``state/batch=N/{frontier_delta|frontier,politeness,metrics}`` and commits it
 by writing ``_COMMIT.json`` LAST (rename-free single-file commit — the marker
 either exists or the snapshot is invisible). Output tables are append-only
-per-batch directories ``tables/<name>/batch=N`` written with overwrite mode,
-so replaying a batch after a crash is idempotent. Resume = load the highest
-committed snapshot and ignore orphan (uncommitted) batch dirs.
+per-batch directories ``tables/<name>/batch=N`` written with overwrite mode;
+a batch writes only the tables of the page kinds it fetched, so its commit
+also deletes every ``batch=N`` dir of a table it does not write (a killed
+attempt may have fetched other kinds), and replaying a batch after a crash
+is idempotent. Resume = load the highest committed snapshot and ignore
+orphan (uncommitted) batch dirs.
 
 Frontier state is MERGE-ON-READ (the Iceberg MERGE INTO analog): a normal
 batch writes only ``frontier_delta`` — the rows whose status changed plus the
@@ -25,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -129,6 +133,13 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
         marker.unlink()
     if frontier is None and frontier_delta is None:
         raise ValueError("commit_batch needs a frontier or a frontier_delta")
+    # a killed attempt of this batch may have written output tables this
+    # one does not (it fetched other page kinds); drop them so the marker
+    # commits exactly the dirs written now. payload_verify is never in
+    # `tables` (post-marker), so a stale one always goes.
+    for stale in (Path(out_dir) / TABLES).glob(f"*/batch={batch_id}"):
+        if stale.parent.name not in (tables or {}):
+            shutil.rmtree(stale)
     # Every O(batch) write — the small state tables and the output tables —
     # COALESCES to at most one file per core (shuffle-free; the upstream
     # stage still runs core-wide): the natural partitioning inherits the

@@ -403,3 +403,46 @@ def test_loop_stops_at_drained_frontier(spark, site_cfg, corpus_pdf, crawled):
         assert sorted(p.name for p in state.iterdir()) == before
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_replayed_batch_drops_tables_it_no_longer_writes(
+        spark, site_cfg, corpus_pdf, crawled):
+    """A killed attempt of batch N may have written article tables that the
+    resumed batch N (index-only this time) does not write. The replay's
+    commit deletes them, so no orphan row becomes visible once the batch is
+    committed, and the store matches the uninterrupted run."""
+    import pathlib
+
+    fr = (crawled.frontier().where(F.col("status").isin("fetched", "failed"))
+          .select("batch_id", "kind").toPandas())
+    kinds = {b: set(g.kind) for b, g in fr.groupby("batch_id")}
+    n = min(b for b, ks in kinds.items() if ks == {"index"})
+    m = min(b for b, ks in kinds.items() if "article" in ks)
+    corpus = spark.createDataFrame(corpus_pdf)
+    out = tempfile.mkdtemp(prefix="crawl_replay_")
+    try:
+        C.crawl(spark, corpus, _seeds(site_cfg), out,
+                C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=n))
+        # the killed attempt's leftovers: batch m's article tables (and its
+        # verify rows) under batch=n, no marker
+        src, dst = (pathlib.Path(p) / "tables" for p in (crawled.out_dir, out))
+        orphans = ("parsed_articles", "parsed_pushes", "images",
+                   "parse_errors", "payload_verify")
+        for name in orphans:
+            if (src / name / f"batch={m}").exists():
+                shutil.copytree(src / name / f"batch={m}",
+                                dst / name / f"batch={n}")
+        res = C.crawl(spark, corpus, _seeds(site_cfg), out,
+                      C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
+                      resume=True)
+        assert res.final_batch == crawled.final_batch
+        for name in orphans:
+            assert not (dst / name / f"batch={n}").exists(), name
+        for name in ("parsed_articles", "payload_verify"):
+            key = "web_id" if name == "parsed_articles" else "image_id"
+            got = res.table(name).select(key).toPandas()[key]
+            want = crawled.table(name).select(key).toPandas()[key]
+            assert got.is_unique, name
+            assert sorted(got) == sorted(want), name
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
