@@ -8,9 +8,12 @@ as declarative DataFrame plans plus a micro-batch frontier loop:
 
 - frontier/seen/politeness state as partitioned Parquet tables (Iceberg-layout
   snapshot directories, since Iceberg jars are not in this image),
-- URL-seen as a partitioned Bloom filter built/probed with Arrow-vectorized
-  pandas UDFs over hashed canonical URLs (exact anti-join verifies maybe-hits),
-- politeness as a per-host token bucket inside groupBy(host).applyInPandas,
+- URL-seen as an exact anti-join against the frontier, optionally
+  pre-filtered (``seen_filter``) by a partitioned Bloom or deletable cuckoo
+  filter built/probed with Arrow-vectorized pandas UDFs over hashed
+  canonical URLs (the anti-join verifies the maybe-hits),
+- politeness as a per-host token bucket: a Catalyst robots split, then a
+  rank-window admit of each host's top pending rows,
 - ordering as DATA (priority desc, discovery_seq asc per host), never task
   order, so the reference's exact fetch order reproduces under any
   parallelism.

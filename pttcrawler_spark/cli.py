@@ -14,7 +14,7 @@ Maps the reference's flags onto the engine, subcommand for subcommand:
   → engine.store.enrich_ip_asn.
 - ``export``   — export.py:311-338 (`--format ods|csv|json`,
   `--output-folder`, `--output-prefix`) → engine.export.export_sheets
-  (ods degrades to csv with a warning — no ods writer in this stack).
+  (ods: one three-sheet .ods written by engine/ods.py).
 - ``query``    — query.py:14-57 (`--board-name`, `--date-range`,
   `--format console|csv|ods`, `--output-folder`) → engine.query.tw_ip_report.
 

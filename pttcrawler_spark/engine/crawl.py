@@ -35,8 +35,9 @@ Scale design notes (100 TB / 10^10 URLs):
 - every join/agg keys on url/host which are hash-partitionable; host skew is
   bounded by the pre-truncation in operators/politeness (a host contributes
   at most ceil(tokens) rows to any per-host group);
-- the candidate anti-join is the scale hot spot → operators/bloom provides a
-  partitioned Bloom pre-filter so the exact join only sees maybe-seen URLs;
+- the candidate anti-join is the scale hot spot → ``seen_filter`` opts into
+  a partitioned Bloom (or deletable cuckoo) pre-filter, operators/seenfilter,
+  so the exact join only sees maybe-seen URLs;
 - frontier durability is merge-on-read: each batch commits an O(changes)
   delta, periodically compacted to a full snapshot (engine/state docstring) —
   the Iceberg MERGE INTO analog at the parquet level;
@@ -121,7 +122,6 @@ _PAGE_COLS = [("_html", "string"), ("image_bytes", "binary"), ("w", "int"),
 class CrawlConfig:
     delay_s: float = 2.0            # config_example.ini:14
     batch_seconds: float = 60.0     # logical clock advance per micro-batch
-    capacity: float | None = None   # token bucket burst; default = one batch refill
     # host → disallowed URL path prefixes; a matching row ends `failed` in
     # the batch where it is first pending and spends no tokens
     robots: dict[str, list[str]] | None = None
@@ -130,7 +130,6 @@ class CrawlConfig:
     end_index: int | None = None    # CLI --index S E upper bound (crawler_arg.py:44-46)
     max_batches: int = 10_000
     seen_filter: str = ""           # '' (exact anti-join) | 'bloom' | 'cuckoo'
-    bloom_partitions: int = 16
     # North-rule per-row PSNR/phash/caption check, run as a FOLLOW-ON job per
     # batch: batch k's verify reads the COMMITTED images+parsed tables (not
     # the in-memory cache) and overlaps batch k+1's admit/fetch/parse. It
@@ -147,7 +146,8 @@ class CrawlConfig:
 
     @property
     def burst(self) -> float:
-        b = self.capacity if self.capacity is not None else self.batch_seconds / self.delay_s
+        """Token bucket burst: one batch's refill."""
+        b = self.batch_seconds / self.delay_s
         if b < 1.0:
             raise ValueError("token bucket burst must be >= 1 (nothing would ever be admitted)")
         return b
@@ -208,9 +208,10 @@ def _priority() -> F.Column:
     return (board_major + local).cast("long")
 
 
-def _frontier_row_cols(df: DataFrame) -> DataFrame:
+def _frontier_row_cols(df: DataFrame, *extra: str) -> DataFrame:
     """Attach hash/host/salt/priority columns. Input columns: url, kind,
-    board, board_rank, page_index, dom_pos, discovery_seq."""
+    board, board_rank, page_index, dom_pos, discovery_seq, then ``extra``,
+    which pass through last."""
     url = FU.canonicalize(F.col("url"))
     host = FU.host_of(url)
     return df.select(
@@ -219,7 +220,8 @@ def _frontier_row_cols(df: DataFrame) -> DataFrame:
         FU.host_salt(host).alias("host_salt"), "kind", "board", "board_rank",
         "page_index", "dom_pos", _priority().alias("priority"),
         "discovery_seq", F.lit("pending").alias("status"),
-        F.lit(0).alias("retry_count"), F.lit(-1).cast("long").alias("batch_id"))
+        F.lit(0).alias("retry_count"), F.lit(-1).cast("long").alias("batch_id"),
+        *extra)
 
 
 def seed_frontier(spark: SparkSession, seeds: list[tuple[str, str]]) -> DataFrame:
@@ -237,10 +239,10 @@ def _seen_filter(cfg: CrawlConfig):
     exact anti-join alone, else an empty BloomState / CuckooState."""
     if cfg.seen_filter == "bloom":
         from ..operators import bloom as BL
-        return BL.BloomState(cfg.bloom_partitions)
+        return BL.BloomState()
     if cfg.seen_filter == "cuckoo":
         from ..operators import cuckoo as CK
-        return CK.CuckooState(cfg.bloom_partitions)
+        return CK.CuckooState()
     if cfg.seen_filter:
         raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
     return None
@@ -263,10 +265,12 @@ def _index_entries(ok: DataFrame) -> DataFrame:
                    F.col("_html").alias("html")))
 
 
-def _discover(ok: DataFrame, entries: DataFrame, cfg: CrawlConfig
-              ) -> DataFrame:
-    """A batch's discovered frontier rows, one per URL: each bootstrap
-    page's descending index range (F1) and each index entry's article."""
+def _discover(ok: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """A batch's discovered frontier rows: each bootstrap page's descending
+    index range (F1) and each index entry's article, with the entry's
+    ``entry_web_id`` (NULL on an index row). Every entry keeps its row, so
+    ``article_index`` reads the same frame; ``_rn == 1`` marks the one row
+    per URL that the batch enqueues (the same URL discovered twice)."""
     boot = ok.where(F.col("kind") == "bootstrap")
     new_index = (
         boot.select("board", "board_rank", "url",
@@ -286,19 +290,20 @@ def _discover(ok: DataFrame, entries: DataFrame, cfg: CrawlConfig
             ).alias("url"),
             F.lit("index").alias("kind"), "board", "board_rank", "page_index",
             F.lit(-1).alias("dom_pos"), F.lit(0).cast("long").alias("discovery_seq"),
+            F.lit(None).cast("string").alias("entry_web_id"),
         )
     )
-    candidates = entries.select(
+    candidates = _index_entries(ok).select(
         FU.join_url(F.col("url"), F.col("href")).alias("url"),
         F.lit("article").alias("kind"), "board", "board_rank", "page_index",
         "dom_pos", F.col("dom_pos").cast("long").alias("discovery_seq"),
+        "entry_web_id",
     )
-    rows = _frontier_row_cols(candidates.unionByName(new_index))
+    rows = _frontier_row_cols(candidates.unionByName(new_index), "entry_web_id")
     # dedupe within the batch (same URL discovered twice), deterministic
     w_url = Window.partitionBy("url").orderBy(
         F.col("priority").desc(), F.col("discovery_seq").asc())
-    return (rows.withColumn("_rn", F.row_number().over(w_url))
-            .where(F.col("_rn") == 1).drop("_rn"))
+    return rows.withColumn("_rn", F.row_number().over(w_url))
 
 
 def _article_index(entries: DataFrame) -> DataFrame:
@@ -569,10 +574,12 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
 
         ok = fetched.where(F.col("_html").isNotNull())
         tables: dict[str, DataFrame] = {}
-        pre_anti = new_rows = None
+        discovered = pre_anti = new_rows = None
         if n_ok.get("bootstrap") or n_ok.get("index"):
-            entries = _index_entries(ok)
-            pre_anti = _discover(ok, entries, cfg).persist()
+            # one cache holds the index parse: the enqueue side and the
+            # article_index write both read it, so each page parses once
+            discovered = _discover(ok, cfg).persist()
+            pre_anti = discovered.where(F.col("_rn") == 1).select(*FRONTIER_COLS)
             # URL-seen: bloom pre-filter (scale path) + exact anti-join (truth)
             if bloom is not None:
                 maybe_seen, definitely_new = bloom.split(pre_anti)
@@ -580,14 +587,15 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
                 new_rows = definitely_new.unionByName(verified_new)
             else:
                 new_rows = pre_anti.join(frontier.select("url"), "url", "left_anti")
-            # materialize discovery once (the count also fills pre_anti's
-            # cache): the checkpoints, the delta, politeness and metrics
-            # writes all read it concurrently, and racing a lazy persist
-            # would re-run the index parse and anti-join once per job
+            # materialize discovery once (the count also fills
+            # discovered's cache): the checkpoints, the delta, politeness and
+            # metrics writes all read it concurrently, and racing a lazy
+            # persist would re-run the index parse and anti-join once per job
             new_rows = new_rows.persist()
             new_rows.count()
             if n_ok.get("index"):
-                tables["article_index"] = _article_index(entries)
+                tables["article_index"] = _article_index(
+                    discovered.where(F.col("entry_web_id").isNotNull()))
         ph.mark("discover")
 
         parsed_all = stop_pages = None
@@ -726,7 +734,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         frontier = fut_frontier.result()
         politeness = fut_politeness.result()
         has_pending = pending_next.get["n"] > 0
-        for df in (fetched, parsed_all, pre_anti, new_rows, marked):
+        for df in (fetched, parsed_all, discovered, new_rows, marked):
             if df is not None:
                 df.unpersist()
         # batch N durably committed → its verify runs while batch N+1

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-N_HASH_PARTITIONS = 64  # bloom partition count; murmur3(host) % P salt space
+N_HASH_PARTITIONS = 64  # host-salt space: murmur3(host) % P (metrics' partition_id)
 
 
 def canonicalize(url: Column) -> Column:

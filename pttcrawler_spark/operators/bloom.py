@@ -6,15 +6,14 @@ the exact anti-join's shuffle is the crawl's hot spot; the Bloom filter
 splits candidates into *definitely-new* (skip the join — the overwhelming
 majority on a frontier that keeps expanding) and *maybe-seen* (verified by
 the exact join, so false positives never lose URLs; the filter is an
-OPTIMIZATION, the join remains the truth).
+OPTIMIZATION, the join remains the truth). The crawl uses it only under
+``CrawlConfig.seen_filter='bloom'``; the default is the exact anti-join.
 
-Layout: P partitions keyed by pmod(xxhash64(url), P); each partition owns an
-independent bit array (a row: partition_id, bloom_bytes). Build/probe/update
-are `cogroup(...).applyInPandas` stages — each task sees exactly one blob +
-that partition's keys, all numpy-vectorized (Kirsch-Mitzenmacher double
-hashing from the 64-bit key: bit_i = (h1 + i*h2) mod m). Nothing is ever
-broadcast or collected: at 10^10 keys × 16 bits the filter is ~20 GB spread
-over P partitions, each task touching only its ~20 GB / P slice.
+The partitioned Spark dataflow (partition key, rebuild, cogroup update and
+probe, save/load) is operators/seenfilter.py; this module is the
+per-partition kernel: one bit array per blob row (bloom_bytes, with its
+n_bits/n_hashes geometry), numpy-vectorized Kirsch-Mitzenmacher double
+hashing from the 64-bit key: bit_i = (h1 + i*h2) mod m.
 
 A cuckoo-filter variant (operators/cuckoo.py) supports deletions for
 re-crawl workflows (--upgrade analog).
@@ -22,165 +21,54 @@ re-crawl workflows (--upgrade analog).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .seenfilter import PartitionedFilter
 
 BLOB_SCHEMA = "partition_id int, bloom_bytes binary, n_items long, n_bits long, n_hashes int"
 
 
-def _hash_parts(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    u = h.astype(np.uint64)
+def _bit_positions(hashes: np.ndarray, m: int, k: int):
+    """(byte index, bit mask) of each of the k bits of every key."""
+    u = hashes.astype(np.uint64)
     h1 = u & np.uint64(0xFFFFFFFF)
     h2 = (u >> np.uint64(32)) | np.uint64(1)  # odd → full-period stride
-    return h1, h2
-
-
-def _set_bits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> None:
-    h1, h2 = _hash_parts(hashes)
     for i in range(k):
         idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-        np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                         (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)))
+        yield ((idx >> np.uint64(3)).astype(np.int64),
+               np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
 
 
-def _test_bits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> np.ndarray:
-    h1, h2 = _hash_parts(hashes)
-    out = np.ones(len(hashes), dtype=bool)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-        out &= (byte & (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))) != 0
-    return out
-
-
-class BloomState:
+class BloomState(PartitionedFilter):
     """Distributed bloom blobs as a (small-rowcount, large-bytes) DataFrame."""
+
+    NAME = "bloom"
+    BLOB_SCHEMA = BLOB_SCHEMA
 
     def __init__(self, partitions: int = 16, bits_per_key: int = 16,
                  bits_per_partition: int = 1 << 20, n_hashes: int | None = None):
-        self.p = partitions
+        super().__init__(partitions)
         self.m = bits_per_partition
         self.k = n_hashes or max(1, round(0.693 * bits_per_key))
-        self.blobs: DataFrame | None = None
 
-    # -- helpers --------------------------------------------------------------
-    def _pid(self, col):
-        return F.pmod(col, F.lit(self.p)).cast("int")
+    def _fresh(self) -> dict:
+        return {"bloom_bytes": bytes(self.m // 8), "n_items": 0,
+                "n_bits": self.m, "n_hashes": self.k}
 
-    def _empty_blob(self, pid: int) -> dict:
-        return {"partition_id": pid,
-                "bloom_bytes": bytes(self.m // 8),
-                "n_items": 0, "n_bits": self.m, "n_hashes": self.k}
+    @staticmethod
+    def _insert(blob: dict, hashes: np.ndarray) -> dict:
+        bits = np.frombuffer(blob["bloom_bytes"], dtype=np.uint8).copy()
+        for byte, mask in _bit_positions(hashes, int(blob["n_bits"]),
+                                         int(blob["n_hashes"])):
+            np.bitwise_or.at(bits, byte, mask)
+        return {**blob, "bloom_bytes": bits.tobytes(),
+                "n_items": blob["n_items"] + len(hashes)}
 
-    def rebuild(self, hashes: DataFrame) -> None:
-        """hashes: one column url_hash (long). Full rebuild (resume path)."""
-        m, k, p = self.m, self.k, self.p
-        spark = hashes.sparkSession
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            h = pdf["url_hash"].to_numpy()
-            _set_bits(bits, h, m, k)
-            return pd.DataFrame([{
-                "partition_id": int(pdf["partition_id"].iloc[0]),
-                "bloom_bytes": bits.tobytes(), "n_items": len(h),
-                "n_bits": m, "n_hashes": k}])
-
-        built = (
-            hashes.withColumn("partition_id", self._pid(F.col("url_hash")))
-            .groupBy("partition_id").applyInPandas(build, schema=BLOB_SCHEMA)
-        )
-        empties = spark.createDataFrame(
-            [self._empty_blob(i) for i in range(p)], schema=BLOB_SCHEMA)
-        self.blobs = (
-            built.unionByName(empties)
-            .groupBy("partition_id")
-            .agg(F.max_by(F.struct("bloom_bytes", "n_items", "n_bits", "n_hashes"),
-                          "n_items").alias("s"))
-            .select("partition_id", "s.bloom_bytes", "s.n_items", "s.n_bits", "s.n_hashes")
-        )
-
-    def add(self, hashes: DataFrame) -> None:
-        """OR the new keys into the blobs (cogroup: blob ∪ its partition's keys)."""
-        m, k = self.m, self.k
-        keyed = hashes.withColumn("partition_id", self._pid(F.col("url_hash")))
-
-        def merge(blob_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(blob_pdf) == 0:
-                return pd.DataFrame(
-                    columns=["partition_id", "bloom_bytes", "n_items", "n_bits", "n_hashes"])
-            bits = np.frombuffer(bytes(blob_pdf["bloom_bytes"].iloc[0]),
-                                 dtype=np.uint8).copy()
-            h = keys_pdf["url_hash"].to_numpy() if len(keys_pdf) else np.array([], dtype=np.int64)
-            if len(h):
-                _set_bits(bits, h, m, k)
-            row = blob_pdf.iloc[0]
-            return pd.DataFrame([{
-                "partition_id": int(row["partition_id"]),
-                "bloom_bytes": bits.tobytes(),
-                "n_items": int(row["n_items"]) + len(h),
-                "n_bits": m, "n_hashes": k}])
-
-        self.blobs = (
-            self.blobs.groupBy("partition_id")
-            .cogroup(keyed.groupBy("partition_id"))
-            .applyInPandas(merge, schema=BLOB_SCHEMA)
-        )
-
-    def split(self, rows: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """rows must carry url_hash → (maybe_seen, definitely_new), same schema."""
-        m, k = self.m, self.k
-        cols = rows.columns
-        keyed = rows.withColumn("partition_id", self._pid(F.col("url_hash")))
-        # NB: do NOT StructType.add() on keyed.schema — it mutates the
-        # DataFrame's cached schema object and corrupts later analysis.
-        schema_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                               for f in keyed.schema.fields) + ", `maybe_seen` boolean"
-
-        def probe(rows_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(rows_pdf) == 0:
-                return rows_pdf.assign(maybe_seen=pd.Series(dtype=bool))
-            if len(blob_pdf) == 0:
-                return rows_pdf.assign(maybe_seen=False)
-            bits = np.frombuffer(bytes(blob_pdf["bloom_bytes"].iloc[0]), dtype=np.uint8)
-            flags = _test_bits(bits, rows_pdf["url_hash"].to_numpy(), m, k)
-            return rows_pdf.assign(maybe_seen=flags)
-
-        probed = (
-            keyed.groupBy("partition_id")
-            .cogroup(self.blobs.groupBy("partition_id"))
-            .applyInPandas(probe, schema=schema_ddl)
-        )
-        maybe = probed.where(F.col("maybe_seen")).select(*cols)
-        new = probed.where(~F.col("maybe_seen")).select(*cols)
-        return maybe, new
-
-    # -- persistence (alongside the engine snapshots) -------------------------
-    def _dir(self, out_dir: str, batch_id: int) -> Path:
-        return Path(out_dir) / "state" / f"batch={batch_id}" / "bloom"
-
-    def save(self, out_dir: str, batch_id: int) -> None:
-        d = self._dir(out_dir, batch_id)
-        self.blobs.write.mode("overwrite").parquet(str(d))
-        # re-read: break lineage so blobs don't re-apply every cogroup each batch
-        self.blobs = self.blobs.sparkSession.read.parquet(str(d))
-
-    def load(self, out_dir: str, batch_id: int) -> bool:
-        d = self._dir(out_dir, batch_id)
-        if not d.exists():
-            return False
-        spark = __import__("pyspark.sql", fromlist=["SparkSession"]).SparkSession.getActiveSession()
-        self.blobs = spark.read.parquet(str(d))
-        return True
-
-    def fp_rate_estimate(self) -> DataFrame:
-        """Per-partition expected FP rate: (1 - e^{-kn/m})^k."""
-        return self.blobs.select(
-            "partition_id", "n_items",
-            F.pow(1 - F.exp(-F.lit(self.k) * F.col("n_items") / F.lit(self.m)),
-                  F.lit(self.k)).alias("fp_rate"),
-        )
+    @staticmethod
+    def _lookup(blob: dict, hashes: np.ndarray) -> np.ndarray:
+        bits = np.frombuffer(blob["bloom_bytes"], dtype=np.uint8)
+        out = np.ones(len(hashes), dtype=bool)
+        for byte, mask in _bit_positions(hashes, int(blob["n_bits"]),
+                                         int(blob["n_hashes"])):
+            out &= (bits[byte] & mask) != 0
+        return out

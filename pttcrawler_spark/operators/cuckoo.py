@@ -1,25 +1,24 @@
 """Partitioned cuckoo filter — the deletable URL-seen variant (north rule).
 
-Same partitioned layout and cogroup/applyInPandas dataflow as
-operators/bloom.py, but supports DELETE: needed when a URL must be re-crawled
+Same partitioned Spark dataflow as operators/bloom.py (both are
+operators/seenfilter.py), plus DELETE: needed when a URL must be re-crawled
 (the reference's --upgrade re-fetch, crawler/article.py:152-157 skips only
-when not upgrading). Standard (2,4)-cuckoo filter: 16-bit fingerprints,
-4 slots/bucket, two candidate buckets i1 = h mod b and i2 = i1 XOR
-(mix(fp) mod b), ~500-step kick loop (Fan et al., CoNEXT'14 — public
-algorithm). Lookups/deletes are numpy-vectorized; inserts walk a short kick
-loop per key inside the Arrow batch (no per-row Python in the Spark plan —
-the loop lives inside one grouped-map UDF call, same shape a native filter
-binding would have).
+when not upgrading). The crawl uses it only under
+``CrawlConfig.seen_filter='cuckoo'``. This module is the per-partition
+kernel: a standard (2,4)-cuckoo filter per blob row (table_bytes, with its
+n_buckets geometry): 16-bit fingerprints, 4 slots/bucket, two candidate
+buckets i1 = h mod b and i2 = i1 XOR (mix(fp) mod b), ~500-step kick loop
+(Fan et al., CoNEXT'14 — public algorithm). Lookups are numpy-vectorized;
+inserts/deletes walk a short loop per key inside the Arrow batch (no
+per-row Python in the Spark plan — the loop lives inside one grouped-map
+UDF call, same shape a native filter binding would have).
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .seenfilter import PartitionedFilter
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -44,181 +43,88 @@ def _alt(i: np.ndarray, fp: np.ndarray, b: int) -> np.ndarray:
     return ((i.astype(np.uint64) ^ _mix(fp)) % np.uint64(b)).astype(np.int64)
 
 
-class _Table:
-    def __init__(self, n_buckets: int, data: bytes | None = None):
-        self.b = n_buckets
-        if data is None:
-            self.t = np.zeros((n_buckets, SLOTS), dtype=np.uint16)
+def _table(blob: dict) -> np.ndarray:
+    """The blob's (n_buckets, SLOTS) fingerprint table, writable."""
+    return np.frombuffer(blob["table_bytes"], dtype=np.uint16).reshape(
+        int(blob["n_buckets"]), SLOTS).copy()
+
+
+def _put(t: np.ndarray, i: int, fp) -> bool:
+    empty = np.flatnonzero(t[i] == 0)
+    if len(empty):
+        t[i, empty[0]] = fp
+    return bool(len(empty))
+
+
+def _insert_many(t: np.ndarray, hashes: np.ndarray) -> None:
+    b = len(t)
+    for fp, i1 in zip(_fingerprint(hashes), _i1(hashes, b)):
+        i2 = int(_alt(np.array([i1]), np.array([fp]), b)[0])
+        if _put(t, int(i1), fp) or _put(t, i2, fp):
+            continue
+        # kick loop (deterministic slot choice: rotate by a counter)
+        cur_i, cur_fp = int(i1), np.uint16(fp)
+        for kick in range(MAX_KICKS):
+            slot = kick % SLOTS
+            cur_fp, t[cur_i, slot] = t[cur_i, slot], cur_fp
+            cur_i = int(_alt(np.array([cur_i]), np.array([cur_fp]), b)[0])
+            if _put(t, cur_i, cur_fp):
+                break
         else:
-            self.t = np.frombuffer(data, dtype=np.uint16).reshape(n_buckets, SLOTS).copy()
-
-    def insert_many(self, hashes: np.ndarray) -> int:
-        fps = _fingerprint(hashes)
-        i1s = _i1(hashes, self.b)
-        inserted = 0
-        rng_state = np.uint64(0x9E3779B97F4A7C15)
-        for fp, i1 in zip(fps, i1s):
-            i2 = int(_alt(np.array([i1]), np.array([fp]), self.b)[0])
-            done = False
-            for i in (int(i1), i2):
-                row = self.t[i]
-                empty = np.flatnonzero(row == 0)
-                if len(empty):
-                    row[empty[0]] = fp
-                    done = True
-                    break
-            if done:
-                inserted += 1
-                continue
-            # kick loop (deterministic slot choice: rotate by a counter)
-            cur_i, cur_fp = int(i1), np.uint16(fp)
-            ok = False
-            for kick in range(MAX_KICKS):
-                slot = kick % SLOTS
-                cur_fp, self.t[cur_i, slot] = self.t[cur_i, slot], cur_fp
-                cur_i = int(_alt(np.array([cur_i]), np.array([cur_fp]), self.b)[0])
-                row = self.t[cur_i]
-                empty = np.flatnonzero(row == 0)
-                if len(empty):
-                    row[empty[0]] = cur_fp
-                    ok = True
-                    break
-            if not ok:
-                raise RuntimeError("cuckoo filter full — resize needed")
-            inserted += 1
-            _ = rng_state
-        return inserted
-
-    def lookup_many(self, hashes: np.ndarray) -> np.ndarray:
-        fps = _fingerprint(hashes)
-        i1s = _i1(hashes, self.b)
-        i2s = _alt(i1s, fps, self.b)
-        in1 = (self.t[i1s] == fps[:, None]).any(axis=1)
-        in2 = (self.t[i2s] == fps[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete_many(self, hashes: np.ndarray) -> int:
-        fps = _fingerprint(hashes)
-        i1s = _i1(hashes, self.b)
-        i2s = _alt(i1s, fps, self.b)
-        deleted = 0
-        for fp, i1, i2 in zip(fps, i1s, i2s):
-            for i in (int(i1), int(i2)):
-                row = self.t[i]
-                hit = np.flatnonzero(row == fp)
-                if len(hit):
-                    row[hit[0]] = 0
-                    deleted += 1
-                    break
-        return deleted
+            raise RuntimeError("cuckoo filter full — resize needed")
 
 
-class CuckooState:
+def _delete_many(t: np.ndarray, hashes: np.ndarray) -> int:
+    fps = _fingerprint(hashes)
+    i1s = _i1(hashes, len(t))
+    i2s = _alt(i1s, fps, len(t))
+    deleted = 0
+    for fp, i1, i2 in zip(fps, i1s, i2s):
+        for i in (int(i1), int(i2)):
+            hit = np.flatnonzero(t[i] == fp)
+            if len(hit):
+                t[i, hit[0]] = 0
+                deleted += 1
+                break
+    return deleted
+
+
+class CuckooState(PartitionedFilter):
     """Same DataFrame-of-blobs interface as BloomState, plus remove()."""
 
+    NAME = "cuckoo"
+    BLOB_SCHEMA = BLOB_SCHEMA
+
     def __init__(self, partitions: int = 16, buckets_per_partition: int = 1 << 14):
-        self.p = partitions
+        super().__init__(partitions)
         self.b = buckets_per_partition
-        self.blobs: DataFrame | None = None
 
-    def _pid(self, col):
-        return F.pmod(col, F.lit(self.p)).cast("int")
+    def _fresh(self) -> dict:
+        return {"table_bytes": bytes(self.b * SLOTS * 2), "n_buckets": self.b,
+                "n_items": 0, "n_deleted": 0}
 
-    def rebuild(self, hashes: DataFrame) -> None:
-        b, p = self.b, self.p
-        spark = hashes.sparkSession
+    def remove(self, hashes) -> None:
+        self._update(hashes, self._delete)
 
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            t = _Table(b)
-            h = pdf["url_hash"].to_numpy()
-            n = t.insert_many(h)
-            return pd.DataFrame([{
-                "partition_id": int(pdf["partition_id"].iloc[0]),
-                "table_bytes": t.t.tobytes(), "n_buckets": b,
-                "n_items": n, "n_deleted": 0}])
+    @staticmethod
+    def _insert(blob: dict, hashes: np.ndarray) -> dict:
+        t = _table(blob)
+        _insert_many(t, hashes)
+        return {**blob, "table_bytes": t.tobytes(),
+                "n_items": blob["n_items"] + len(hashes)}
 
-        built = (hashes.withColumn("partition_id", self._pid(F.col("url_hash")))
-                 .groupBy("partition_id").applyInPandas(build, schema=BLOB_SCHEMA))
-        empties = spark.createDataFrame(
-            [{"partition_id": i, "table_bytes": _Table(b).t.tobytes(),
-              "n_buckets": b, "n_items": 0, "n_deleted": 0} for i in range(p)],
-            schema=BLOB_SCHEMA)
-        self.blobs = (
-            built.unionByName(empties).groupBy("partition_id")
-            .agg(F.max_by(F.struct("table_bytes", "n_buckets", "n_items", "n_deleted"),
-                          "n_items").alias("s"))
-            .select("partition_id", "s.table_bytes", "s.n_buckets", "s.n_items",
-                    "s.n_deleted")
-        )
+    @staticmethod
+    def _delete(blob: dict, hashes: np.ndarray) -> dict:
+        t = _table(blob)
+        d = _delete_many(t, hashes)
+        return {**blob, "table_bytes": t.tobytes(),
+                "n_items": blob["n_items"] - d, "n_deleted": blob["n_deleted"] + d}
 
-    def _apply(self, hashes: DataFrame, op: str) -> None:
-        b = self.b
-        keyed = hashes.withColumn("partition_id", self._pid(F.col("url_hash")))
-
-        def merge(blob_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(blob_pdf) == 0:
-                return pd.DataFrame(columns=["partition_id", "table_bytes",
-                                             "n_buckets", "n_items", "n_deleted"])
-            row = blob_pdf.iloc[0]
-            t = _Table(b, bytes(row["table_bytes"]))
-            h = keys_pdf["url_hash"].to_numpy() if len(keys_pdf) else np.array([], dtype=np.int64)
-            ni, nd = int(row["n_items"]), int(row["n_deleted"])
-            if len(h):
-                if op == "add":
-                    ni += t.insert_many(h)
-                else:
-                    d = t.delete_many(h)
-                    nd += d
-                    ni -= d
-            return pd.DataFrame([{
-                "partition_id": int(row["partition_id"]),
-                "table_bytes": t.t.tobytes(), "n_buckets": b,
-                "n_items": ni, "n_deleted": nd}])
-
-        self.blobs = (self.blobs.groupBy("partition_id")
-                      .cogroup(keyed.groupBy("partition_id"))
-                      .applyInPandas(merge, schema=BLOB_SCHEMA))
-
-    def add(self, hashes: DataFrame) -> None:
-        self._apply(hashes, "add")
-
-    def remove(self, hashes: DataFrame) -> None:
-        self._apply(hashes, "remove")
-
-    def split(self, rows: DataFrame) -> tuple[DataFrame, DataFrame]:
-        b = self.b
-        cols = rows.columns
-        keyed = rows.withColumn("partition_id", self._pid(F.col("url_hash")))
-        schema_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                               for f in keyed.schema.fields) + ", maybe_seen boolean"
-
-        def probe(rows_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(rows_pdf) == 0:
-                return rows_pdf.assign(maybe_seen=pd.Series(dtype=bool))
-            if len(blob_pdf) == 0:
-                return rows_pdf.assign(maybe_seen=False)
-            t = _Table(b, bytes(blob_pdf["table_bytes"].iloc[0]))
-            return rows_pdf.assign(
-                maybe_seen=t.lookup_many(rows_pdf["url_hash"].to_numpy()))
-
-        probed = (keyed.groupBy("partition_id")
-                  .cogroup(self.blobs.groupBy("partition_id"))
-                  .applyInPandas(probe, schema=schema_ddl))
-        return (probed.where(F.col("maybe_seen")).select(*cols),
-                probed.where(~F.col("maybe_seen")).select(*cols))
-
-    def save(self, out_dir: str, batch_id: int) -> None:
-        d = self._dir(out_dir, batch_id)
-        self.blobs.write.mode("overwrite").parquet(str(d))
-        self.blobs = self.blobs.sparkSession.read.parquet(str(d))
-
-    def _dir(self, out_dir: str, batch_id: int) -> Path:
-        return Path(out_dir) / "state" / f"batch={batch_id}" / "cuckoo"
-
-    def load(self, out_dir: str, batch_id: int) -> bool:
-        d = self._dir(out_dir, batch_id)
-        if not d.exists():
-            return False
-        from pyspark.sql import SparkSession
-        self.blobs = SparkSession.getActiveSession().read.parquet(str(d))
-        return True
+    @staticmethod
+    def _lookup(blob: dict, hashes: np.ndarray) -> np.ndarray:
+        t = _table(blob)
+        fps = _fingerprint(hashes)
+        i1s = _i1(hashes, len(t))
+        i2s = _alt(i1s, fps, len(t))
+        return ((t[i1s] == fps[:, None]).any(axis=1)
+                | (t[i2s] == fps[:, None]).any(axis=1))

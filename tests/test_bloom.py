@@ -48,8 +48,7 @@ def test_crawl_with_bloom_matches_exact(spark, site_cfg, corpus_pdf, crawled, or
     out = tempfile.mkdtemp(prefix="crawl_bloom_")
     try:
         res = C.crawl(spark, corpus, seeds_for(site_cfg), out,
-                      C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, seen_filter="bloom",
-                                    bloom_partitions=4))
+                      C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, seen_filter="bloom"))
         eng = res.fetch_order().toPandas().sort_values(["host", "ord"])
         ora = oracle.fetch_events_df()
         for host in ora.host.unique():

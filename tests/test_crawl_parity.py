@@ -446,3 +446,11 @@ def test_replayed_batch_drops_tables_it_no_longer_writes(
             assert sorted(got) == sorted(want), name
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_burst_below_one_token_raises():
+    """The token bucket burst is one batch's refill, batch_seconds/delay_s;
+    a burst under one token would never admit a URL, so it is refused."""
+    assert C.CrawlConfig(delay_s=2.0, batch_seconds=20.0).burst == 10.0
+    with pytest.raises(ValueError, match="burst must be >= 1"):
+        C.CrawlConfig(delay_s=2.0, batch_seconds=1.0).burst

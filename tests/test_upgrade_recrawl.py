@@ -34,8 +34,7 @@ def test_cuckoo_filter_crawl_parity(spark, small):
     sim = run_oracle(pdf, cfg)
     out = tempfile.mkdtemp(prefix="crawl_ck_")
     try:
-        res = _crawl(spark, corpus, cfg, out, seen_filter="cuckoo",
-                     bloom_partitions=4)
+        res = _crawl(spark, corpus, cfg, out, seen_filter="cuckoo")
         assert set(res.url_seen().toPandas().url) == sim.url_seen
         eng = res.fetch_order().toPandas().sort_values(["host", "ord"])
         ora = sim.fetch_events_df()
@@ -118,14 +117,13 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
     cfg, pdf, corpus = small
     out = tempfile.mkdtemp(prefix="crawl_purge_")
     try:
-        res = _crawl(spark, corpus, cfg, out, seen_filter="cuckoo",
-                     bloom_partitions=4)
+        res = _crawl(spark, corpus, cfg, out, seen_filter="cuckoo")
         n_before = res.frontier().count()
         victims_pdf = (res.frontier().where("kind = 'article'")
                        .select("url", "url_hash").limit(3).toPandas())
         victims = victims_pdf.url.tolist()
         n = C.purge_urls(spark, out, victims,
-                         C.CrawlConfig(seen_filter="cuckoo", bloom_partitions=4))
+                         C.CrawlConfig(seen_filter="cuckoo"))
         assert n == 3
 
         # purged rows are gone from the frontier and the seen filter
@@ -147,9 +145,9 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
         idx_urls = (res.frontier().where("kind = 'index'").select("url")
                     .toPandas().url.tolist())
         C.mark_for_recrawl(spark, out, idx_urls,
-                           C.CrawlConfig(seen_filter="cuckoo", bloom_partitions=4))
+                           C.CrawlConfig(seen_filter="cuckoo"))
         res3 = _crawl(spark, corpus, cfg, out, resume=True,
-                      seen_filter="cuckoo", bloom_partitions=4)
+                      seen_filter="cuckoo")
         fr = res3.frontier().where(F.col("url").isin(victims))
         assert fr.count() == 3  # re-enqueued as new rows
         assert (fr.toPandas().status == "fetched").all()
