@@ -120,12 +120,6 @@ def _site_cfg(site: dict):
     return S.SiteConfig(**site)
 
 
-def _seeds(cfg) -> list[tuple[str, str]]:
-    return [(cfg.board_name(b),
-             f"{cfg.base_url(cfg.board_name(b))}/bbs/{cfg.board_name(b)}/index.html")
-            for b in range(cfg.n_boards)]
-
-
 def prepare_corpus(spark, site: dict, path: str) -> None:
     from pttcrawler_spark.synth import site as S
     # (kind, page_index)-partitioned: each crawl batch admits ~one index
@@ -167,7 +161,7 @@ def crawl_corpus(cores: int, site: dict, corpus_path: str) -> dict:
         corpus = spark.read.parquet(corpus_path)
         ccfg = C.CrawlConfig(delay_s=0.01, batch_seconds=60.0)
         t0 = time.perf_counter()
-        res = C.crawl(spark, corpus, _seeds(cfg), out, ccfg)
+        res = C.crawl(spark, corpus, cfg.seeds(), out, ccfg)
         wall = time.perf_counter() - t0
         n_fetched = res.frontier().where("status = 'fetched'").count()
         # sustained = throughput over the steady-state drain batches (>=50%

@@ -201,12 +201,12 @@ def _corpus_and_seeds(spark, args, board: str | None):
                           articles_per_page=parts[2],
                           seed=parts[3] if len(parts) > 3 else 42)
         corpus = generate_site(spark, site)
-        boards = [site.board_name(b) for b in range(site.n_boards)]
+        seeds = site.seeds()
         if board:
+            boards = [b for b, _ in seeds]
             if board not in boards:
                 raise SystemExit(f"board {board!r} not in synthetic site {boards}")
-            boards = [board]
-        seeds = [(b, f"{site.base_url(b)}/bbs/{b}/index.html") for b in boards]
+            seeds = [s for s in seeds if s[0] == board]
         return corpus, seeds
     raise SystemExit("need --corpus or --synth (no live PTT in this environment)")
 

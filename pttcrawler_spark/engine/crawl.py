@@ -49,6 +49,7 @@ Scale design notes (100 TB / 10^10 URLs):
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import math
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -111,11 +112,11 @@ FRONTIER_COLS = [
     "board", "board_rank", "page_index", "dom_pos", "priority",
     "discovery_seq", "status", "retry_count", "batch_id",
 ]
-# the page columns a fetch adds to its admitted frontier rows (NULL for a
-# URL the fetch could not get)
-_PAGE_COLS = [("_html", "string"), ("image_bytes", "binary"), ("w", "int"),
-              ("h", "int"), ("fmt", "string"), ("caption", "string"),
-              ("phash", "long")]
+# the fetcher contract (see crawl): the page columns a fetch adds to its
+# admitted frontier rows, NULL for a URL the fetch could not get
+PAGE_COLS = [("_html", "string"), ("image_bytes", "binary"), ("w", "int"),
+             ("h", "int"), ("fmt", "string"), ("caption", "string"),
+             ("phash", "long")]
 
 
 @dataclass
@@ -318,11 +319,10 @@ def _articles(ok: DataFrame) -> DataFrame:
 
 def _parse_articles(art: DataFrame) -> DataFrame:
     """SINGLE-PASS parse: the multi-KB html column is the batch's dominant
-    byte/CPU stream; articles+pushes+errors+verify-caption are all
-    extracted in ONE scan whose narrow result the loop persists, so each
-    downstream table write reads parsed fields, never raw pages. Measured
-    at local[32]: the split-consumer version re-streamed the cached html
-    3-4x/batch."""
+    byte/CPU stream; articles+pushes+errors are all extracted in ONE scan
+    whose narrow result the loop persists, so each downstream table write
+    reads parsed fields, never raw pages. Measured at local[32]: the
+    split-consumer version re-streamed the cached html 3-4x/batch."""
     return FP.parse_article_pages(
         art.select("web_id", "board", "page_index", "dom_pos", "url",
                    F.col("_html").alias("html")))
@@ -363,8 +363,7 @@ def _article_tables(art: DataFrame, parsed_all: DataFrame,
                       "w", "h", "fmt", "caption", "phash")
               .join(kept, "image_id"))
     return {
-        "parsed_articles": parsed_ok.drop(
-            "parse_error", "pushes", "expected_caption", "url"),
+        "parsed_articles": parsed_ok.drop("parse_error", "pushes", "url"),
         "parsed_pushes": FP.pushes_from_parsed(parsed_ok),
         "images": images,
         "parse_errors": parse_errors,
@@ -392,11 +391,54 @@ def _empty_table(spark: SparkSession, name: str) -> DataFrame | None:
     only the tables of the page kinds it fetched, so a crawl that never
     fetched an article (or an index page) has no such dir to read."""
     pages = seed_frontier(spark, []).select(
-        "*", *[F.lit(None).cast(t).alias(c) for c, t in _PAGE_COLS])
+        "*", *[F.lit(None).cast(t).alias(c) for c, t in PAGE_COLS])
     if name == "article_index":
         return _article_index(_index_entries(pages))
     art = _articles(pages)
     return _article_tables(art, _parse_articles(art), None)[0].get(name)
+
+
+def _fetch_corpus(corpus: DataFrame, admitted: DataFrame) -> DataFrame:
+    """Simulated fetch: URL → page body from the ``corpus`` page table. The
+    admitted set (bounded by the politeness budget) is broadcast into the
+    corpus scan, so the multi-GB corpus is never shuffled — a single pass
+    with a runtime filter, not a sort-merge join spilling both sides.
+
+    Scan pruning: the admitted set has page LOCALITY (the discovery barrier
+    admits ~one index page's articles per host per batch), so when the
+    corpus is partitioned by (kind, page_index) (bench.prepare_corpus) a
+    static filter over the batch's distinct (kind, page_index) pairs prunes
+    the scan to the partitions actually being "fetched" — the
+    simulated-network analog of fetch cost scaling with the batch, not the
+    site. The collect is over the aggregated pair set (≤ pages per board),
+    not rows. Corpus contract: an article row's page_index is the index page
+    that lists it (synth/site.py guarantees it)."""
+    pages = corpus.select("url", "kind", "page_index", *[
+        F.col("html").alias(c) if c == "_html" else c for c, _ in PAGE_COLS])
+    pairs = admitted.groupBy("kind", "page_index").count().collect()
+    art_pages = sorted({r["page_index"] for r in pairs
+                        if r["kind"] == "article"})
+    prune = F.lit(False)
+    if any(r["kind"] != "article" for r in pairs):
+        # bootstrap rows are index.html pages, served as kind=index
+        prune = prune | (F.col("kind") == "index")
+    if art_pages:
+        prune = prune | ((F.col("kind") == "article")
+                         & F.col("page_index").isin(art_pages))
+    pages = pages.where(prune)
+    adm = admitted.withColumn(
+        "_page_kind",
+        F.when(F.col("kind") == "bootstrap", F.lit("index"))
+        .otherwise(F.col("kind")))
+    matched = (
+        pages.drop("page_index")
+        .withColumnRenamed("kind", "_page_kind")
+        .join(F.broadcast(adm), ["url", "_page_kind"])
+        .drop("_page_kind"))
+    missing = admitted.join(pages.select("url"), "url", "left_anti")
+    missing = missing.select(
+        "*", *[F.lit(None).cast(t).alias(c) for c, t in PAGE_COLS])
+    return matched.unionByName(missing)
 
 
 def crawl(spark: SparkSession, corpus: DataFrame | None,
@@ -405,8 +447,9 @@ def crawl(spark: SparkSession, corpus: DataFrame | None,
           resume: bool = False, fetcher=None) -> CrawlResult:
     """``corpus``: simulated-fetch page table (tests/benches), or None when
     ``fetcher`` is given — a callable admitted-DataFrame → fetched-DataFrame
-    (same rows + _html/payload columns), e.g. sources.http_fetch.fetcher_for
-    for a REAL network fetch stage.
+    (same rows + the ``PAGE_COLS`` columns), e.g.
+    sources.http_fetch.fetcher_for for a REAL network fetch stage; the
+    politeness operator has already bounded each host's admitted rows.
 
     Holds the store lock (_LOCK.json) for the whole run: a migration
     (engine/migrate.migrate_state) must never rewrite state dirs under a
@@ -415,6 +458,10 @@ def crawl(spark: SparkSession, corpus: DataFrame | None,
     `migrate current` reports the truth and the first migrate is a no-op."""
     from . import migrate as MG
 
+    if fetcher is None:
+        if corpus is None:
+            raise ValueError("need a corpus or a fetcher")
+        fetcher = functools.partial(_fetch_corpus, corpus)
     lock = ST.acquire_lock(out_dir, owner="crawl")
     try:
         # no-op unless the store is genuinely brand-new (no marker AND no
@@ -425,24 +472,17 @@ def crawl(spark: SparkSession, corpus: DataFrame | None,
         # `with` waits for a running one, so the lock is released after
         # it even when a batch raises
         with ThreadPoolExecutor(max_workers=1) as verify_pool:
-            return _crawl_impl(spark, corpus, seeds, out_dir, cfg, resume,
-                               fetcher, verify_pool)
+            return _crawl_impl(spark, fetcher, seeds, out_dir, cfg, resume,
+                               verify_pool)
     finally:
         ST.release_lock(lock)
 
 
-def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
-                seeds: list[tuple[str, str]], out_dir: str,
-                cfg: CrawlConfig | None, resume: bool, fetcher,
+def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
+                out_dir: str, cfg: CrawlConfig | None, resume: bool,
                 verify_pool: ThreadPoolExecutor) -> CrawlResult:
     cfg = cfg or CrawlConfig()
-    if corpus is None and fetcher is None:
-        raise ValueError("need a corpus or a fetcher")
     bloom = _seen_filter(cfg)
-    pages = None if corpus is None else corpus.select(
-        "url", "kind", "page_index", F.col("html").alias("_html"),
-        "image_bytes", "w", "h", "fmt", "caption", "phash",
-    )
 
     snap = ST.load_snapshot(spark, out_dir) if resume else None
     if snap is not None:
@@ -507,50 +547,7 @@ def _crawl_impl(spark: SparkSession, corpus: DataFrame | None,
         # per consuming job
         marked = marked.persist()
         admitted = marked.where(F.col("admit")).drop("admit")
-        if fetcher is not None:
-            # real fetch stage (e.g. HTTP mapInPandas, sources/http_fetch):
-            # network I/O happens on executors, politeness already bounded
-            # the per-host batch upstream
-            fetched = fetcher(admitted).persist(_HEAVY_CACHE)
-        else:
-            # simulated fetch: URL → page body. The admitted set (bounded by
-            # the politeness budget) is broadcast into the corpus scan, so
-            # the multi-GB corpus is never shuffled — a single pass with a
-            # runtime filter, not a sort-merge join spilling both sides.
-            # Scan pruning: the admitted set has page LOCALITY (the discovery
-            # barrier admits ~one index page's articles per host per batch),
-            # so when the corpus is partitioned by (kind, page_index)
-            # (bench.prepare_corpus) a static filter over the batch's
-            # distinct (kind, page_index) pairs prunes the scan to the
-            # partitions actually being "fetched" — the simulated-network
-            # analog of fetch cost scaling with the batch, not the site.
-            # The collect is over the aggregated pair set (≤ pages per
-            # board), not rows. Corpus contract: an article row's page_index
-            # is the index page that lists it (synth/site.py guarantees it).
-            pairs = admitted.groupBy("kind", "page_index").count().collect()
-            art_pages = sorted({r["page_index"] for r in pairs
-                                if r["kind"] == "article"})
-            prune = F.lit(False)
-            if any(r["kind"] != "article" for r in pairs):
-                # bootstrap rows are index.html pages, served as kind=index
-                prune = prune | (F.col("kind") == "index")
-            if art_pages:
-                prune = prune | ((F.col("kind") == "article")
-                                 & F.col("page_index").isin(art_pages))
-            pages_b = pages.where(prune)
-            adm = admitted.withColumn(
-                "_page_kind",
-                F.when(F.col("kind") == "bootstrap", F.lit("index"))
-                .otherwise(F.col("kind")))
-            matched = (
-                pages_b.drop("page_index")
-                .withColumnRenamed("kind", "_page_kind")
-                .join(F.broadcast(adm), ["url", "_page_kind"])
-                .drop("_page_kind"))
-            missing = admitted.join(pages_b.select("url"), "url", "left_anti")
-            missing = missing.select(
-                "*", *[F.lit(None).cast(t).alias(c) for c, t in _PAGE_COLS])
-            fetched = matched.unionByName(missing).persist(_HEAVY_CACHE)
+        fetched = fetch(admitted).persist(_HEAVY_CACHE)
         # materialize the batch ONCE, before anything else is planned: this
         # kind-count collect is the batch's single full pass over `fetched`
         # (the corpus scan / network fetch), and its per-kind OK counts

@@ -149,13 +149,13 @@ def verify_payloads(
 # admit/fetch/parse — Python+memory-bus work overlapping JVM-heavy work —
 # and it reads parquet, so it pins none of batch k's heavy in-memory cache.
 #
-# The ``expected_caption`` column is NOT stored in the images table; it is
-# re-derived from the committed parsed_articles table. Safe because
-# expected_caption ≡ title by construction (functions/parse.py: title =
-# when(has_metas, coalesce(meta2, '')).otherwise('') and expected_caption =
-# coalesce(try_element_at(metas, 2), '') — try_element_at of an empty array
-# is NULL, so both reduce to coalesce(meta2, '') in every branch; pinned by
-# tests/test_properties.py::test_expected_caption_equals_title).
+# A page's expected caption is its second metaline value,
+# coalesce(try_element_at(metas, 2), ''). No table stores it: the verify
+# takes it from the committed parsed_articles.title, which is the same
+# expression by construction (functions/parse.py: title =
+# when(has_metas, coalesce(meta2, '')).otherwise(''), and try_element_at of
+# an empty array is NULL, so both reduce to coalesce(meta2, '') in every
+# branch; pinned by tests/test_properties.py::test_expected_caption_equals_title).
 #
 # Durability: ``tables/payload_verify/batch=N`` lands AFTER batch N's
 # _COMMIT.json marker and is trusted via Spark's _SUCCESS file; a crash

@@ -263,17 +263,16 @@ def parse_articles(fetched: DataFrame) -> DataFrame:
 def parse_article_pages(fetched: DataFrame) -> DataFrame:
     """Single-pass article parse: one scan of ``html`` yields the article
     fields (= :func:`parse_articles`), the push divs as an ``array<struct>``
-    column (``pushes``; explode later with :func:`pushes_from_parsed`), the
-    expected caption (metas[2], the verify stage's reference), and the F7
-    ``parse_error`` column.
+    column (``pushes``; explode later with :func:`pushes_from_parsed`), and
+    the F7 ``parse_error`` column.
 
     Why: in the crawl loop the multi-KB html column is the dominant byte/CPU
-    stream of a batch. Parsing articles, pushes, errors, and the verify
-    caption as FOUR separate consumers re-reads (and partially re-regexes)
-    that column once per consumer; this function makes it one pass whose
-    narrow result is persisted, so every downstream table write scans parsed
-    fields instead of raw pages. Same extraction semantics, same citations as
-    the split functions (crawler/article.py:119-382).
+    stream of a batch. Parsing articles, pushes and errors as separate
+    consumers re-reads (and partially re-regexes) that column once per
+    consumer; this function makes it one pass whose narrow result is
+    persisted, so every downstream table write scans parsed fields instead
+    of raw pages. Same extraction semantics, same citations as the split
+    functions (crawler/article.py:119-382).
     """
     html = F.col("html")
     carry = [c for c in ("url",) if c in fetched.columns]
@@ -281,8 +280,6 @@ def parse_article_pages(fetched: DataFrame) -> DataFrame:
         push_divs(html),
         lambda d: F.struct(*[c.alias(k) for k, c in push_fields(d).items()]),
     )
-    expected_caption = F.coalesce(
-        F.try_element_at(meta_values(html), F.lit(2)), F.lit(""))
     return fetched.select(
         F.col("web_id"),
         F.col("board"),
@@ -290,7 +287,6 @@ def parse_article_pages(fetched: DataFrame) -> DataFrame:
         F.col("dom_pos"),
         *_article_exprs(html),
         pushes.alias("pushes"),
-        expected_caption.alias("expected_caption"),
         *[F.col(c) for c in carry],
     )
 

@@ -7,8 +7,8 @@ deletes it. This engine keeps the same job-management surface but stores the
 registry as a JSON document next to the store (no OS coupling) and executes
 due jobs through the CLI (`pttcrawler_spark.cli.main`), which is how a
 workflow runner (Airflow/cron/systemd timer) would drive it on a cluster.
-Continuous cadence within a process is separately covered by Structured
-Streaming processingTime triggers (streaming/stream.py).
+Within a process the crawl's cadence is its own micro-batch loop
+(engine/crawl.py), which drains the frontier until nothing is pending.
 
 Cron semantics kept: a job fires at hour:minute on days where
 day-of-month % cycle_days == start_day % cycle_days (the `dom.every(n)`

@@ -10,8 +10,8 @@ no extra pacing happens here). Failures never throw: status/error land in
 columns and the crawl loop marks the row failed.
 
 ``fetcher_for`` returns a callable matching engine/crawl.py's ``fetcher``
-contract: admitted-DataFrame → DataFrame with the page-payload columns
-(_html, image_bytes, w, h, fmt, caption, phash) — HTTP pages carry no
+contract: admitted-DataFrame → DataFrame with the page columns
+``crawl.PAGE_COLS`` (_html plus the image payload) — HTTP pages carry no
 sidecar image metadata, so payload columns are NULL here; a production
 pipeline fills them from a follow-up media-fetch stage.
 """
@@ -23,15 +23,16 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..engine.crawl import PAGE_COLS
+
 DEFAULT_HEADERS = {
     # crawler/article.py:27-29 (public UA string + over18 gate)
     "User-Agent": "Mozilla/5.0 (compatible; spark-frontier/1.0)",
     "Cookie": "over18=1",
 }
 
-FETCH_COLS_DDL = ("_html string, image_bytes binary, w int, h int, "
-                  "fmt string, caption string, phash long, "
-                  "http_status int, fetch_error string")
+FETCH_COLS_DDL = ", ".join(
+    [f"{c} {t}" for c, t in PAGE_COLS] + ["http_status int", "fetch_error string"])
 
 
 def fetch_http(admitted: DataFrame, timeout: float = 10.0,

@@ -91,10 +91,7 @@ def main(argv: list[str] | None = None) -> None:
         tmp = tempfile.mkdtemp(prefix="submit_corpus_")
         corpus.write.mode("overwrite").parquet(os.path.join(tmp, "corpus"))
         corpus = spark.read.parquet(os.path.join(tmp, "corpus"))
-    seeds = [(cfg.board_name(b),
-              f"{cfg.base_url(cfg.board_name(b))}/bbs/{cfg.board_name(b)}/index.html")
-             for b in range(cfg.n_boards)]
-    res = C.crawl(spark, corpus, seeds, args.out,
+    res = C.crawl(spark, corpus, cfg.seeds(), args.out,
                   C.CrawlConfig(delay_s=args.delay_s,
                                 batch_seconds=args.batch_seconds,
                                 seen_filter=args.seen_filter))

@@ -2590,15 +2590,13 @@ def _messy_url(k, v):
 
 
 def stream_urlseen_twin(spark, sf_dir):
-    """Batch-semantics twin of streaming/stream.url_seen_stream
+    """Batch-semantics twin of a streaming URL-seen dedup
     (``dropDuplicatesWithinWatermark`` on the canonical URL): with the
-    watermark horizon ≥ the data's event-time span, the streaming operator
-    emits exactly the FIRST-arriving event per canonical key — i.e. this
-    window query. The driver grades this twin against the DuckDB oracle;
-    tests/test_streaming.py::test_url_seen_stream_equals_batch_twin pins the
-    real streaming operator to the same key set on the same derived input,
-    so the stream's dedup semantics transitively get an oracle row
-    (round-3 verdict #7).
+    watermark horizon ≥ the data's event-time span, such a streaming
+    operator emits exactly the FIRST-arriving event per canonical key —
+    i.e. this window query. The driver grades this twin against the DuckDB
+    oracle (tests/test_suite_oracle.py); the crawl's own URL-seen set is
+    the frontier anti-join in engine/crawl.py.
 
     Input: events mapped to messy URL variants (event_id%6 picks the f13
     variant, event_id%400 the canonical key) so canonicalization is load-
@@ -2622,13 +2620,11 @@ _LATENCY_MAX_LAG_S = 86400  # 1 day — sized to the sparse per-user event rate
 
 
 def stream_latency_twin(spark, sf_dir):
-    """Batch-semantics twin of streaming/stream.fetch_latency_stream (the
-    watermarked stream-stream INTERVAL join): with watermarks ≥ the data
-    span nothing is evicted or late-dropped, so the stream's inner interval
-    join ≡ this bounded-range batch join exactly. Graded here against the
-    DuckDB oracle; tests/test_streaming.py::
-    test_fetch_latency_stream_equals_batch_twin pins the real streaming
-    operator to this result on the same derived input (round-3 verdict #7).
+    """Batch-semantics twin of a watermarked stream-stream INTERVAL join
+    (crawl latency): with watermarks ≥ the data span nothing is evicted or
+    late-dropped, so such a stream's inner interval join ≡ this
+    bounded-range batch join exactly. Graded here against the DuckDB oracle
+    (tests/test_suite_oracle.py).
 
     discoveries = 'view' events, fetches = 'click' events, keyed by a per-
     user URL; a fetch joins its discovery iff it lands within

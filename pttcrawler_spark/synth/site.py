@@ -65,6 +65,11 @@ class SiteConfig:
     def base_url(self, board: str) -> str:
         return f"https://{self.host(board)}"
 
+    def seeds(self) -> list[tuple[str, str]]:
+        """[(board, index.html url)] in crawl order: the crawl's seeds."""
+        return [(b, f"{self.base_url(b)}/bbs/{b}/index.html")
+                for b in map(self.board_name, range(self.n_boards))]
+
 
 def _rng(cfg: SiteConfig, *key: object) -> np.random.Generator:
     return np.random.default_rng(img.seed_for(f"{cfg.seed}|" + "|".join(map(str, key))))

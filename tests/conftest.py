@@ -39,14 +39,6 @@ def oracle(corpus_pdf, site_cfg):
     return run_oracle(corpus_pdf, site_cfg)
 
 
-def seeds_for(cfg):
-    return [
-        (cfg.board_name(i),
-         f"{cfg.base_url(cfg.board_name(i))}/bbs/{cfg.board_name(i)}/index.html")
-        for i in range(cfg.n_boards)
-    ]
-
-
 @pytest.fixture(scope="session")
 def crawled(spark, site_cfg, corpus_pdf):
     """One full engine crawl over the session corpus, shared by all tests."""
@@ -57,7 +49,7 @@ def crawled(spark, site_cfg, corpus_pdf):
 
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_shared_")
-    res = C.crawl(spark, corpus, seeds_for(site_cfg), out,
+    res = C.crawl(spark, corpus, site_cfg.seeds(), out,
                   C.CrawlConfig(delay_s=2.0, batch_seconds=20.0))
     yield res
     shutil.rmtree(out, ignore_errors=True)

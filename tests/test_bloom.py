@@ -8,7 +8,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from conftest import seeds_for
 from pttcrawler_spark.operators.bloom import BloomState
 
 
@@ -47,7 +46,7 @@ def test_crawl_with_bloom_matches_exact(spark, site_cfg, corpus_pdf, crawled, or
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_bloom_")
     try:
-        res = C.crawl(spark, corpus, seeds_for(site_cfg), out,
+        res = C.crawl(spark, corpus, site_cfg.seeds(), out,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, seen_filter="bloom"))
         eng = res.fetch_order().toPandas().sort_values(["host", "ord"])
         ora = oracle.fetch_events_df()

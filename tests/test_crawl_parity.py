@@ -20,9 +20,6 @@ from pttcrawler_spark.oracle.simulator import run_oracle
 from pttcrawler_spark.synth.site import SiteConfig, generate_site_pandas
 
 
-from conftest import seeds_for as _seeds  # noqa: E402
-
-
 def test_per_host_fetch_order_matches_oracle(crawled, oracle):
     eng = crawled.fetch_order().toPandas().sort_values(["host", "ord"])
     ora = oracle.fetch_events_df()
@@ -164,8 +161,8 @@ def test_resume_bit_identical(spark, site_cfg, corpus_pdf, crawled):
     out = tempfile.mkdtemp(prefix="crawl_resume_")
     try:
         cfgk = C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=2)
-        C.crawl(spark, corpus, _seeds(site_cfg), out, cfgk)
-        res2 = C.crawl(spark, corpus, _seeds(site_cfg), out,
+        C.crawl(spark, corpus, site_cfg.seeds(), out, cfgk)
+        res2 = C.crawl(spark, corpus, site_cfg.seeds(), out,
                        C.CrawlConfig(delay_s=2.0, batch_seconds=20.0), resume=True)
 
         full = crawled  # uninterrupted run
@@ -207,7 +204,7 @@ def test_robots_blocking(spark):
         assert len(blocked) == n_blocked, prefix
         out = tempfile.mkdtemp(prefix="crawl_robots_")
         try:
-            res = C.crawl(spark, corpus, _seeds(cfg1), out,
+            res = C.crawl(spark, corpus, cfg1.seeds(), out,
                           C.CrawlConfig(delay_s=2.0, batch_seconds=10.0,
                                         robots={host: [prefix]}))
             fr = res.frontier().toPandas().set_index("url")
@@ -236,7 +233,7 @@ def test_crash_resume_replays_frontier_deltas(spark, site_cfg, corpus_pdf,
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_crash_")
     try:
-        C.crawl(spark, corpus, _seeds(site_cfg), out,
+        C.crawl(spark, corpus, site_cfg.seeds(), out,
                 C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=2))
         # simulate the crash: drop the graceful-exit compaction so only
         # batch 0's full frontier + batch 1's delta remain
@@ -248,7 +245,7 @@ def test_crash_resume_replays_frontier_deltas(spark, site_cfg, corpus_pdf,
         assert (pathlib.Path(out) / "state" / f"batch={last}"
                 / "frontier_delta").exists()
 
-        res2 = C.crawl(spark, corpus, _seeds(site_cfg), out,
+        res2 = C.crawl(spark, corpus, site_cfg.seeds(), out,
                        C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                        resume=True)
         full = crawled
@@ -284,7 +281,7 @@ def test_kill_between_admit_and_commit_never_double_admits(
     try:
         cfg = C.CrawlConfig(delay_s=2.0, batch_seconds=20.0,
                             max_batches=kill_after + 1)
-        C.crawl(spark, corpus, _seeds(site_cfg), out, cfg)
+        C.crawl(spark, corpus, site_cfg.seeds(), out, cfg)
         last = ST.latest_committed(out)
         assert last == kill_after
 
@@ -300,7 +297,7 @@ def test_kill_between_admit_and_commit_never_double_admits(
         # orphan ambiguity; a killed run has none for the orphan batch
         assert ST.latest_committed(out) == last
 
-        res = C.crawl(spark, corpus, _seeds(site_cfg), out,
+        res = C.crawl(spark, corpus, site_cfg.seeds(), out,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                       resume=True)
 
@@ -335,7 +332,7 @@ def test_crawl_without_articles_builds_empty_store(spark):
     corpus = spark.createDataFrame(generate_site_pandas(cfg1))
     out = tempfile.mkdtemp(prefix="crawl_noart_")
     try:
-        res = C.crawl(spark, corpus, _seeds(cfg1), out,
+        res = C.crawl(spark, corpus, cfg1.seeds(), out,
                       C.CrawlConfig(start_index=99))
         assert sum(b["article"] for b in res.batch_stats) == 0
         for name in ("parsed_articles", "parsed_pushes", "images"):
@@ -395,7 +392,7 @@ def test_loop_stops_at_drained_frontier(spark, site_cfg, corpus_pdf, crawled):
         state = pathlib.Path(out) / "state"
         before = sorted(p.name for p in state.iterdir())
         res = C.crawl(spark, spark.createDataFrame(corpus_pdf),
-                      _seeds(site_cfg), out,
+                      site_cfg.seeds(), out,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                       resume=True)
         assert res.final_batch == crawled.final_batch
@@ -421,7 +418,7 @@ def test_replayed_batch_drops_tables_it_no_longer_writes(
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_replay_")
     try:
-        C.crawl(spark, corpus, _seeds(site_cfg), out,
+        C.crawl(spark, corpus, site_cfg.seeds(), out,
                 C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=n))
         # the killed attempt's leftovers: batch m's article tables (and its
         # verify rows) under batch=n, no marker
@@ -432,7 +429,7 @@ def test_replayed_batch_drops_tables_it_no_longer_writes(
             if (src / name / f"batch={m}").exists():
                 shutil.copytree(src / name / f"batch={m}",
                                 dst / name / f"batch={n}")
-        res = C.crawl(spark, corpus, _seeds(site_cfg), out,
+        res = C.crawl(spark, corpus, site_cfg.seeds(), out,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                       resume=True)
         assert res.final_batch == crawled.final_batch

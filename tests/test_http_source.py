@@ -17,7 +17,6 @@ from urllib.parse import urlparse
 
 import pytest
 
-from conftest import seeds_for as _seeds
 from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.oracle.simulator import run_oracle
 from pttcrawler_spark.sources import http_fetch as H
@@ -65,7 +64,7 @@ def test_http_crawl_matches_oracle(spark, served_site):
     out = tempfile.mkdtemp(prefix="crawl_http_")
     try:
         fetcher = H.fetcher_for(timeout=10.0, url_rewrite=_rewrite(port))
-        res = C.crawl(spark, None, _seeds(cfg), out,
+        res = C.crawl(spark, None, cfg.seeds(), out,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0,
                                     verify_payload=False),
                       fetcher=fetcher)

@@ -16,15 +16,13 @@ from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.engine import migrate as M
 from pttcrawler_spark.engine import state as ST
 
-from conftest import seeds_for
-
 
 @pytest.fixture(scope="module")
 def old_store(spark, site_cfg, corpus_pdf):
     """A 2-batch crawl checkpoint downgraded to the r1_initial layout."""
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_migrate_")
-    C.crawl(spark, corpus, seeds_for(site_cfg), out,
+    C.crawl(spark, corpus, site_cfg.seeds(), out,
             C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=2))
     M.downgrade_for_test(spark, out)
     yield out
@@ -48,7 +46,7 @@ def test_migrate_then_resume_matches_uninterrupted(spark, site_cfg,
     assert applied["r4_robots_nullable"] > 0
 
     corpus = spark.createDataFrame(corpus_pdf)
-    resumed = C.crawl(spark, corpus, seeds_for(site_cfg), old_store,
+    resumed = C.crawl(spark, corpus, site_cfg.seeds(), old_store,
                       C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                       resume=True)
     want = crawled.frontier().orderBy("url").toPandas()
@@ -76,7 +74,7 @@ def test_fresh_store_is_stamped_head(spark, site_cfg, corpus_pdf):
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_fresh_stamp_")
     try:
-        C.crawl(spark, corpus, seeds_for(site_cfg), out,
+        C.crawl(spark, corpus, site_cfg.seeds(), out,
                 C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=1))
         assert M.revision(out) == M.HEAD
         assert M.migrate_state(spark, out) == {}

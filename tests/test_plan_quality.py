@@ -464,3 +464,39 @@ def test_dsir_models_broadcast(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert tree.count("Scan parquet") == 2
+
+
+def test_corpus_fetch_prunes_scan_to_admitted_pages(spark, corpus_pdf,
+                                                     tmp_path):
+    """The simulated fetch (engine/crawl._fetch_corpus) over a corpus laid
+    out like bench.prepare_corpus's, partitioned by (kind, page_index):
+    a batch that admits one index page's articles plus the next index page
+    reads the index partitions and that page's article partition only."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from pttcrawler_spark.engine import crawl as C
+
+    path = str(tmp_path / "corpus")
+    (spark.createDataFrame(corpus_pdf).write
+     .partitionBy("kind", "page_index").parquet(path))
+    page = 2
+    adm = corpus_pdf[
+        ((corpus_pdf.kind == "article") & (corpus_pdf.page_index == page))
+        | ((corpus_pdf.kind == "index") & (corpus_pdf.page_index == page - 1))
+    ][["url", "kind", "page_index"]]
+    fetched = C._fetch_corpus(spark.read.parquet(path),
+                              spark.createDataFrame(adm))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        fetched.explain("formatted")
+    scans = [re.sub(r"#\d+", "", line).split("PartitionFilters: [")[1]
+             for line in buf.getvalue().splitlines() if "PartitionFilters" in line]
+    assert scans
+    keep = f"((kind = index) OR ((kind = article) AND (page_index = {page})))"
+    for filters in scans:
+        assert set(filters.rstrip("]").split(", ")) - {
+            "isnotnull(kind)", "isnotnull(page_index)"} == {keep}, filters
+    # every admitted URL was served from the pruned scan
+    assert fetched.where(F.col("_html").isNotNull()).count() == len(adm) > 2

@@ -96,12 +96,12 @@ def test_canonicalize_idempotent_and_host_stable(spark):
 
 
 def test_expected_caption_equals_title(spark, corpus_pdf):
-    """The async verify (engine/verify.verify_committed_batch) re-derives
-    expected_caption from the committed parsed_articles.title — valid only
-    because title ≡ expected_caption by construction (functions/parse.py:
-    both reduce to coalesce(meta2, '') in every metas branch). Pin that on
-    the full session corpus plus adversarial pages (no metas / 1 meta /
-    empty html)."""
+    """The post-commit verify (engine/verify.verify_committed_batch) takes
+    a page's expected caption, its second metaline value
+    coalesce(try_element_at(meta_values(html), 2), ''), from the committed
+    parsed_articles.title — valid only because the parse's title reduces to
+    the same expression in every metas branch. Pin that on the full session
+    corpus plus adversarial pages (no metas / 1 meta / empty html)."""
     from pyspark.sql import functions as F
 
     from pttcrawler_spark.functions import parse as FP
@@ -119,7 +119,11 @@ def test_expected_caption_equals_title(spark, corpus_pdf):
           .withColumn("board", F.lit("b"))
           .withColumn("page_index", F.lit(1))
           .withColumn("dom_pos", F.lit(1)))
-    out = (FP.parse_article_pages(df)
-           .select("title", "expected_caption").toPandas())
-    assert len(out) > 3
+    expected_caption = F.coalesce(
+        F.try_element_at(FP.meta_values(F.col("html")), F.lit(2)), F.lit(""))
+    out = (FP.parse_article_pages(df).select("web_id", "title")
+           .join(df.select("web_id", expected_caption.alias("expected_caption")),
+                 "web_id")
+           .toPandas())
+    assert len(out) == len(pdf) > 3
     assert (out["title"] == out["expected_caption"]).all()

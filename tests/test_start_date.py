@@ -11,7 +11,6 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import seeds_for as _seeds
 from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.oracle.simulator import run_oracle
 from pttcrawler_spark.synth.site import SiteConfig, generate_site_pandas
@@ -28,7 +27,7 @@ def setup(spark):
     pdf = generate_site_pandas(cfg)
     sim = run_oracle(pdf, cfg, start_date=CUTOFF)
     out = tempfile.mkdtemp(prefix="crawl_sd_")
-    res = C.crawl(spark, spark.createDataFrame(pdf), _seeds(cfg), out,
+    res = C.crawl(spark, spark.createDataFrame(pdf), cfg.seeds(), out,
                   C.CrawlConfig(delay_s=2.0, batch_seconds=20.0,
                                 start_date=CUTOFF))
     yield cfg, sim, res

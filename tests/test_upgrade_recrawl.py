@@ -10,7 +10,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import seeds_for as _seeds
 from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.oracle.simulator import run_oracle
 from pttcrawler_spark.synth.site import SiteConfig, generate_site_pandas
@@ -24,7 +23,7 @@ def small(spark):
 
 
 def _crawl(spark, corpus, cfg, out, resume=False, **kw):
-    return C.crawl(spark, corpus, _seeds(cfg), out,
+    return C.crawl(spark, corpus, cfg.seeds(), out,
                    C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, **kw),
                    resume=resume)
 

@@ -17,7 +17,6 @@ from pathlib import Path
 import pandas as pd
 import pytest
 
-from conftest import seeds_for
 from pttcrawler_spark.engine import crawl as C
 from pttcrawler_spark.engine import verify as V
 
@@ -28,7 +27,7 @@ PAYLOAD_DDL = ("image_id string, bytes binary, w int, h int, fmt string, "
 def _run(spark, corpus_pdf, site_cfg, **cfg_kwargs):
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_va_")
-    res = C.crawl(spark, corpus, seeds_for(site_cfg), out,
+    res = C.crawl(spark, corpus, site_cfg.seeds(), out,
                   C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, **cfg_kwargs))
     return res, out
 
@@ -102,12 +101,12 @@ def test_resume_heals_missing_verify(spark, corpus_pdf, site_cfg):
     out = tempfile.mkdtemp(prefix="crawl_va_resume_")
     try:
         cfg = C.CrawlConfig(delay_s=2.0, batch_seconds=20.0, max_batches=3)
-        C.crawl(spark, corpus, seeds_for(site_cfg), out, cfg)
+        C.crawl(spark, corpus, site_cfg.seeds(), out, cfg)
         pv_base = Path(out) / "tables" / "payload_verify"
         dirs = sorted(pv_base.glob("batch=*"))
         if dirs:  # first batches may be bootstrap/index-only
             shutil.rmtree(dirs[-1])
-        res2 = C.crawl(spark, corpus, seeds_for(site_cfg), out,
+        res2 = C.crawl(spark, corpus, site_cfg.seeds(), out,
                        C.CrawlConfig(delay_s=2.0, batch_seconds=20.0),
                        resume=True)
         # every batch with an images dir has a _SUCCESS-complete verify dir
@@ -163,7 +162,7 @@ def test_lock_outlives_verify_when_a_batch_raises(spark, corpus_pdf, site_cfg,
     out = tempfile.mkdtemp(prefix="crawl_va_lock_")
     try:
         with pytest.raises(RuntimeError, match="injected"):
-            C.crawl(spark, corpus, seeds_for(site_cfg), out,
+            C.crawl(spark, corpus, site_cfg.seeds(), out,
                     C.CrawlConfig(delay_s=2.0, batch_seconds=20.0))
         assert len(released) == 1
         assert fail_at - 1 in ends, "crawl returned before the verify ended"
