@@ -41,9 +41,11 @@ Scale design notes (100 TB / 10^10 URLs):
 - frontier durability is merge-on-read: each batch commits an O(changes)
   delta, periodically compacted to a full snapshot (engine/state docstring) —
   the Iceberg MERGE INTO analog at the parquet level;
-- lineage is broken every batch by an eager localCheckpoint of the frontier
-  and politeness state, so the plan never grows with batch count (the
-  classic iterative-job trap) without a per-batch parquet round-trip.
+- lineage is broken every batch, so the plan never grows with batch count
+  (the classic iterative-job trap): the frontier, which no batch writes in
+  full, by an eager localCheckpoint; the small state (politeness, the
+  seen-filter blobs) by reading it back from the batch's own commit — the
+  files resume reads.
 """
 
 from __future__ import annotations
@@ -163,7 +165,10 @@ class CrawlResult:
     batch_stats: list[dict] = field(default_factory=list)
 
     def frontier(self) -> DataFrame:
-        return ST.load_snapshot(self.spark, self.out_dir).frontier
+        """The latest committed frontier (mark_for_recrawl and purge_urls
+        commit past ``final_batch``), without the rest of the snapshot."""
+        return ST.load_frontier(self.spark, self.out_dir,
+                                ST.latest_committed(self.out_dir))
 
     def table(self, name: str, with_batch: bool = False) -> DataFrame | None:
         """Output table ``name`` over the committed batches; an output table
@@ -235,17 +240,17 @@ def seed_frontier(spark: SparkSession, seeds: list[tuple[str, str]]) -> DataFram
         F.lit(0).cast("long").alias("discovery_seq")))
 
 
-def _seen_filter(cfg: CrawlConfig):
-    """The URL-seen pre-filter state ``cfg.seen_filter`` names: None for the
-    exact anti-join alone, else an empty BloomState / CuckooState."""
-    if cfg.seen_filter == "bloom":
+def _seen_filter(kind: str):
+    """The URL-seen pre-filter state ``kind`` names: None for the exact
+    anti-join alone, else an empty BloomState / CuckooState."""
+    if kind == "bloom":
         from ..operators import bloom as BL
         return BL.BloomState()
-    if cfg.seen_filter == "cuckoo":
+    if kind == "cuckoo":
         from ..operators import cuckoo as CK
         return CK.CuckooState()
-    if cfg.seen_filter:
-        raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
+    if kind:
+        raise ValueError(f"unknown seen_filter {kind!r}")
     return None
 
 
@@ -482,7 +487,7 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
                 out_dir: str, cfg: CrawlConfig | None, resume: bool,
                 verify_pool: ThreadPoolExecutor) -> CrawlResult:
     cfg = cfg or CrawlConfig()
-    bloom = _seen_filter(cfg)
+    bloom = _seen_filter(cfg.seen_filter)
 
     snap = ST.load_snapshot(spark, out_dir) if resume else None
     if snap is not None:
@@ -497,8 +502,11 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
         politeness = _init_politeness(frontier, cfg)
         batch_id = -1
 
-    if bloom is not None and (snap is None or not bloom.load(out_dir, batch_id)):
-        bloom.rebuild(frontier.select("url_hash"))
+    if bloom is not None:
+        if snap is not None and snap.seen and snap.seen[0] == bloom.NAME:
+            bloom.restore(snap.seen[1])
+        else:
+            bloom.rebuild(frontier.select("url_hash"))
 
     n_fetched_total = 0
     batches_run = 0
@@ -660,12 +668,9 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
         )
         deduped = F.lit(0)
         if new_rows is not None:
-            # newly seen hosts join with a full bucket; the groupBy keeps
-            # the state's partition count from growing batch over batch
-            grown = politeness_next.unionByName(_init_politeness(
+            # newly seen hosts join with a full bucket, one row per host
+            politeness_next = politeness_next.unionByName(_init_politeness(
                 new_rows.join(politeness.select("host"), "host", "left_anti"), cfg))
-            politeness_next = grown.groupBy("host").agg(
-                *[F.max(c).alias(c) for c in grown.columns if c != "host"])
             # per-partition lineage: deduped = discovered-this-batch minus
             # actually-new, PER HOST (north rule: per-partition lineage/metrics)
             metrics = (
@@ -683,24 +688,25 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
             F.coalesce(F.col("_deferred"), F.lit(0)).cast("long").alias("deferred"),
             "failed")
 
-        if bloom is not None:
-            if new_rows is not None:
-                bloom.add(new_rows.select("url_hash"))
-            bloom.save(out_dir, batch_id)
+        if bloom is not None and new_rows is not None:
+            bloom.add(new_rows.select("url_hash"))
 
         ph.mark("plan frontier/politeness/metrics")
-        # lineage break WITHOUT a parquet round-trip: the checkpointed
-        # frontier/politeness live in executor block storage; the next batch
-        # plans against a compact leaf, and plan depth stays O(1) in batch
-        # count. (Reliable checkpoint dir on a real cluster.) The explicit
+        # lineage break: the frontier is merge-on-read (a batch commits
+        # only its delta), so it is checkpointed WITHOUT a parquet
+        # round-trip into executor block storage; the next batch plans
+        # against a compact leaf, and plan depth stays O(1) in batch count.
+        # (Reliable checkpoint dir on a real cluster.) The explicit
         # repartition pins the partition count — a bare anti-join ∪ delta
         # union would ADD the delta's partitions to the frontier's every
-        # batch, growing task counts without bound. The frontier checkpoint
-        # also observes the next batch's pending count, so the loop needs no
-        # job of its own to know whether to go on. The checkpoint jobs run
-        # CONCURRENTLY with the commit writes (safe now that `fetched` is
-        # fully materialized — every job reads the cache, nothing races to
-        # recompute it), so their wall time hides behind the write jobs.
+        # batch, growing task counts without bound. The checkpoint also
+        # observes the next batch's pending count, so the loop needs no job
+        # of its own to know whether to go on. It runs CONCURRENTLY with
+        # the commit writes (safe now that `fetched` is fully materialized —
+        # every job reads the cache, nothing races to recompute it), so its
+        # wall time hides behind the write jobs. The small state comes back
+        # from the commit itself (at most one file per core, so its
+        # partition count stays bounded too).
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         pending_next = Observation()
 
@@ -708,28 +714,28 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "loop")
             return fn()
 
-        with ThreadPoolExecutor(max_workers=2) as ckpt_pool:
+        with ThreadPoolExecutor(max_workers=1) as ckpt_pool:
             fut_frontier = ckpt_pool.submit(
                 _in_loop_pool,
                 lambda: frontier_next.repartition(n_shuffle, "url")
                 .observe(pending_next, F.count_if(F.col("status") == "pending")
                          .alias("n"))
                 .localCheckpoint(eager=True))
-            fut_politeness = ckpt_pool.submit(
-                _in_loop_pool,
-                lambda: politeness_next.localCheckpoint(eager=True))
             # the durability writes (output tables + state + marker) run on
-            # this thread beside the two checkpoint jobs; the batch ends when
+            # this thread beside the checkpoint job; the batch ends when
             # its own commit lands, so one batch's heavy caches are resident
             # at a time
             full_due = batch_id % _COMPACT_EVERY == 0
-            ST.commit_batch(out_dir, batch_id,
-                            frontier=frontier_next if full_due else None,
-                            politeness=politeness_next, metrics=metrics,
-                            tables=tables,
-                            frontier_delta=None if full_due else delta)
+            small = ST.commit_batch(
+                out_dir, batch_id,
+                frontier=frontier_next if full_due else None,
+                politeness=politeness_next, metrics=metrics, tables=tables,
+                frontier_delta=None if full_due else delta,
+                seen=None if bloom is None else (bloom.NAME, bloom.blobs))
         frontier = fut_frontier.result()
-        politeness = fut_politeness.result()
+        politeness = small["politeness"]
+        if bloom is not None:
+            bloom.blobs = small[bloom.NAME]
         has_pending = pending_next.get["n"] > 0
         for df in (fetched, parsed_all, discovered, new_rows, marked):
             if df is not None:
@@ -766,8 +772,7 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
                        batch_stats=batch_stats)
 
 
-def mark_for_recrawl(spark: SparkSession, out_dir: str, urls,
-                     cfg: CrawlConfig | None = None) -> int:
+def mark_for_recrawl(spark: SparkSession, out_dir: str, urls) -> int:
     """--upgrade analog (crawler/article.py:152-157: the seen-skip applies
     only when NOT upgrading): flip the given fetched URLs back to pending in
     a NEW committed snapshot. A subsequent ``crawl(..., resume=True)``
@@ -782,7 +787,6 @@ def mark_for_recrawl(spark: SparkSession, out_dir: str, urls,
     ``urls``: DataFrame with a ``url`` column (or list of url strings).
     Returns the number of frontier rows flipped.
     """
-    seen = _seen_filter(cfg or CrawlConfig())
     if not isinstance(urls, DataFrame):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
     snap = ST.load_snapshot(spark, out_dir)
@@ -799,25 +803,19 @@ def mark_for_recrawl(spark: SparkSession, out_dir: str, urls,
             .otherwise(F.col("status")))
         .drop("_re")
     )
-    new_batch = snap.batch_id + 1
     # carry the seen-filter blobs forward so the new snapshot is complete
-    if seen is not None and seen.load(out_dir, snap.batch_id):
-        seen.save(out_dir, new_batch)
-    ST.commit_batch(out_dir, new_batch, frontier_next, snap.politeness,
-                    extra={"recrawl_marked": n})
+    ST.commit_batch(out_dir, snap.batch_id + 1, frontier_next, snap.politeness,
+                    extra={"recrawl_marked": n}, seen=snap.seen)
     return n
 
 
-def purge_urls(spark: SparkSession, out_dir: str, urls,
-               cfg: CrawlConfig | None = None) -> int:
+def purge_urls(spark: SparkSession, out_dir: str, urls) -> int:
     """Retire URLs entirely: DELETE their frontier rows and remove them from
     the URL-seen filter — the flow the deletable cuckoo variant exists for
     (a Bloom filter cannot un-see, so under seen_filter='bloom' this rebuilds
     the filter from the surviving frontier — correct but a full pass).
     Purged URLs CAN later be re-discovered and re-crawled as brand-new
     frontier rows. Returns the number of rows deleted."""
-    cfg = cfg or CrawlConfig()
-    seen = _seen_filter(cfg)
     if not isinstance(urls, DataFrame):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
     snap = ST.load_snapshot(spark, out_dir)
@@ -827,15 +825,17 @@ def purge_urls(spark: SparkSession, out_dir: str, urls,
     doomed = snap.frontier.join(urls, "url", "left_semi")
     n = doomed.count()
     frontier_next = snap.frontier.join(urls, "url", "left_anti")
-    new_batch = snap.batch_id + 1
-    if cfg.seen_filter == "cuckoo":
-        if seen.load(out_dir, snap.batch_id):
-            seen.remove(doomed.select("url_hash"))
-            seen.save(out_dir, new_batch)
-    elif seen is not None:
-        seen.rebuild(frontier_next.select("url_hash"))
-        seen.save(out_dir, new_batch)
-    ST.commit_batch(out_dir, new_batch, frontier_next, snap.politeness,
-                    extra={"purged": n})
+    seen = snap.seen
+    if seen is not None:             # the store's own filter kind
+        kind, blobs = seen
+        filt = _seen_filter(kind)
+        if kind == "cuckoo":
+            filt.restore(blobs)
+            filt.remove(doomed.select("url_hash"))
+        else:
+            filt.rebuild(frontier_next.select("url_hash"))
+        seen = (kind, filt.blobs)
+    ST.commit_batch(out_dir, snap.batch_id + 1, frontier_next, snap.politeness,
+                    extra={"purged": n}, seen=seen)
     return n
 

@@ -4,7 +4,7 @@ The reference evolves its store through an Alembic revision chain
 (db_migration/versions/77eaebfa8062 -> 64f93945c28a -> 6794412e2720 ->
 3af39c6792c0: create tables, add a table + relax post_ip, add ON DELETE
 CASCADE, relax the datetime columns). Our store is parquet state dirs
-(engine/state.py: ``state/batch=N/{frontier[_delta],politeness,metrics}``),
+(engine/state.py: ``state/batch=N/{frontier[_delta],politeness,metrics,...}``),
 so the same story is: a revision marker file in the store directory plus a
 linear chain of upgrade steps that rewrite committed state to the next
 layout. ``migrate_state(spark, store_dir, to_rev)`` walks the chain; a

@@ -2,15 +2,21 @@
 
 Iceberg jars aren't in this image, so we implement the same durability
 contract at the Parquet level: each micro-batch writes a snapshot directory
-``state/batch=N/{frontier_delta|frontier,politeness,metrics}`` and commits it
-by writing ``_COMMIT.json`` LAST (rename-free single-file commit — the marker
-either exists or the snapshot is invisible). Output tables are append-only
-per-batch directories ``tables/<name>/batch=N`` written with overwrite mode;
-a batch writes only the tables of the page kinds it fetched, so its commit
-also deletes every ``batch=N`` dir of a table it does not write (a killed
-attempt may have fetched other kinds), and replaying a batch after a crash
-is idempotent. Resume = load the highest committed snapshot and ignore
-orphan (uncommitted) batch dirs.
+``state/batch=N/{frontier_delta|frontier,politeness,metrics[,bloom|cuckoo]}``
+(the last is the URL-seen filter's blob table, named by its kind, in a store
+that keeps one) and commits it by writing ``_COMMIT.json`` LAST (rename-free
+single-file commit — the marker either exists or the snapshot is
+invisible). Only this module (and engine/migrate, which rewrites state
+dirs by design) knows the layout: the crawl loop gets its small state
+(politeness, the filter blobs) back from each commit as frames over the
+files just written, and resume reads the same files through
+``load_snapshot``. Output tables are append-only per-batch directories
+``tables/<name>/batch=N`` written with overwrite mode; a batch writes only
+the tables of the page kinds it fetched, so its commit also deletes every
+``batch=N`` dir of a table it does not write (a killed attempt may have
+fetched other kinds), and replaying a batch after a crash is idempotent.
+Resume = load the highest committed snapshot and ignore orphan
+(uncommitted) batch dirs.
 
 Frontier state is MERGE-ON-READ (the Iceberg MERGE INTO analog): a normal
 batch writes only ``frontier_delta`` — the rows whose status changed plus the
@@ -40,6 +46,7 @@ from pyspark.sql import functions as F
 STATE = "state"
 TABLES = "tables"
 LOCK_FILE = "_LOCK.json"
+SEEN_FILTERS = ("bloom", "cuckoo")   # seen-filter kinds = their blob dir names
 
 
 def _pid_alive(pid: int) -> bool:
@@ -103,18 +110,35 @@ class Snapshot:
     batch_id: int
     frontier: DataFrame
     politeness: DataFrame
+    seen: tuple[str, DataFrame] | None = None   # (filter kind, blob table)
 
 
 def _batch_dir(out_dir: str, batch_id: int) -> Path:
     return Path(out_dir) / STATE / f"batch={batch_id}"
 
 
+def table_dir(out_dir: str, name: str, batch_id: int) -> Path:
+    """Output table ``name``'s dir for batch ``batch_id``."""
+    return Path(out_dir) / TABLES / name / f"batch={batch_id}"
+
+
+def table_batches(out_dir: str, name: str) -> list[int]:
+    """The batch ids output table ``name`` has a dir for, ascending
+    (uncommitted orphans included)."""
+    return sorted(int(p.name.split("=")[1])
+                  for p in (Path(out_dir) / TABLES / name).glob("batch=*"))
+
+
 def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
                  politeness: DataFrame, metrics: DataFrame | None = None,
                  tables: dict[str, DataFrame] | None = None,
                  extra: dict | None = None,
-                 frontier_delta: DataFrame | None = None) -> None:
+                 frontier_delta: DataFrame | None = None,
+                 seen: tuple[str, DataFrame] | None = None
+                 ) -> dict[str, DataFrame]:
     """Write ALL of a batch's outputs (state + output tables), marker LAST.
+    ``seen``: the URL-seen filter's (kind, blob table), if the store keeps
+    one.
 
     The writes are independent Spark jobs, so they are submitted from a
     driver-side thread pool and run concurrently — on a mostly-idle local[32]
@@ -123,14 +147,20 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
     overwrite into the batch directory and the _COMMIT.json marker is only
     written after every write has succeeded — a crash mid-batch leaves an
     uncommitted orphan that resume overwrites.
+
+    Returns the small state it wrote — ``politeness`` and the blob table
+    under its kind — as frames over the committed files, read with the
+    schemas they were written with (no schema-inference job). The next
+    batch plans against these leaves, so the loop reads its small state the
+    way resume does, and its lineage ends at the commit.
     """
     d = _batch_dir(out_dir, batch_id)
-    # orphan from a killed run: drop only the stale marker; the overwrite
-    # writes below replace the data dirs (a pre-written bloom/cuckoo subdir
-    # from THIS batch must survive — it is committed by the same marker)
-    marker = d / "_COMMIT.json"
-    if marker.exists():
-        marker.unlink()
+    # orphan from a killed run: drop the stale marker and a blob table of
+    # another filter kind; the overwrite writes below replace the rest
+    (d / "_COMMIT.json").unlink(missing_ok=True)
+    for kind in SEEN_FILTERS:
+        if seen is None or kind != seen[0]:
+            shutil.rmtree(d / kind, ignore_errors=True)
     if frontier is None and frontier_delta is None:
         raise ValueError("commit_batch needs a frontier or a frontier_delta")
     # a killed attempt of this batch may have written output tables this
@@ -150,9 +180,12 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
     # 0.3-0.4 s. Only a full frontier compaction must also SPLIT (a
     # 10^10-row frontier needs more files than cores), so it alone keeps
     # the AQE-sized REBALANCE path.
-    par = politeness.sparkSession.sparkContext.defaultParallelism
-    small = {"politeness": politeness, "frontier_delta": frontier_delta,
-             "metrics": metrics}
+    spark = politeness.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    back = {"politeness": politeness}
+    if seen is not None:
+        back[seen[0]] = seen[1]
+    small = {**back, "frontier_delta": frontier_delta, "metrics": metrics}
     jobs: list[tuple[str, DataFrame, dict[str, str]]] = [
         (str(d / name), df.coalesce(par), {})
         for name, df in small.items() if df is not None]
@@ -172,7 +205,7 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
             opts = {"compression": "none", "parquet.enable.dictionary": "false"}
         else:
             opts = {"compression": "snappy"}
-        jobs.append((str(Path(out_dir) / TABLES / name / f"batch={batch_id}"),
+        jobs.append((str(table_dir(out_dir, name, batch_id)),
                      df.coalesce(par), opts))
 
     def _write(item: tuple[str, DataFrame, dict[str, str]]) -> None:
@@ -188,6 +221,8 @@ def commit_batch(out_dir: str, batch_id: int, frontier: DataFrame | None,
         list(ex.map(_write, jobs))  # list() re-raises the first failure
     payload = {"batch_id": batch_id, "committed_at": time.time(), **(extra or {})}
     (d / "_COMMIT.json").write_text(json.dumps(payload))
+    return {name: spark.read.schema(df.schema).parquet(str(d / name))
+            for name, df in back.items()}
 
 
 def latest_committed(out_dir: str) -> int | None:
@@ -247,6 +282,8 @@ def load_snapshot(spark: SparkSession, out_dir: str) -> Snapshot | None:
         batch_id=bid,
         frontier=load_frontier(spark, out_dir, bid),
         politeness=spark.read.parquet(str(d / "politeness")),
+        seen=next(((k, spark.read.parquet(str(d / k)))
+                   for k in SEEN_FILTERS if (d / k).exists()), None),
     )
 
 
@@ -265,18 +302,15 @@ def read_table(spark: SparkSession, out_dir: str, name: str,
     """Union of the per-batch output dirs. ``with_batch=True`` reads via
     basePath so the ``batch=N`` directory becomes a ``batch`` column —
     version ORDER AS DATA for SCD-2 consumers (engine/store.py)."""
-    base = Path(out_dir) / TABLES / name
-    if not base.exists():
-        return None
-    dirs = sorted(base.glob("batch=*"), key=lambda p: int(p.name.split("=")[1]))
-    if max_batch is not None:  # resume: ignore orphan batches beyond the commit
-        dirs = [p for p in dirs if int(p.name.split("=")[1]) <= max_batch]
+    # resume: ignore orphan batches beyond the commit
+    dirs = [str(table_dir(out_dir, name, b)) for b in table_batches(out_dir, name)
+            if max_batch is None or b <= max_batch]
     if not dirs:
         return None
     if with_batch:
-        return (spark.read.option("basePath", str(base))
-                .parquet(*[str(p) for p in dirs]))
-    return spark.read.parquet(*[str(p) for p in dirs])
+        return (spark.read.option("basePath", str(Path(out_dir) / TABLES / name))
+                .parquet(*dirs))
+    return spark.read.parquet(*dirs)
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -12,9 +12,9 @@ For every fetched article payload this stage:
     lossy — quantization legitimately flips borderline phash bits, measured
     max 2/64 at the codec's q-step, and a perceptual hash is by construction
     compared under a small hamming budget),
-  - re-renders the reference pixels for ``image_id`` via the injected
-    ``reference_render`` callable and scores PSNR against the decode
-    (>= 40 dB passes for lossy formats; lossless must be exact),
+  - re-renders the reference pixels for ``image_id`` (synth/images) and
+    scores PSNR against the decode (>= 40 dB passes for lossy formats;
+    lossless must be exact),
   - checks caption equality against the expected caption column.
 
 Rows never throw: failures land as boolean/NULL columns (the engine's
@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..synth import images as img
+from . import state as ST
 
 VERIFY_DDL = (
     "image_id string, fmt string, psnr_db double, pixel_ok boolean, "
@@ -50,7 +51,9 @@ def _verify_batch(pdf: pd.DataFrame,
     measured ~2x less Python CPU per verify batch at 64x64).
 
     ``batch_render=True`` renders references via make_pixels_batch (valid
-    only for the default renderer); an injected renderer stays per-row.
+    only for the default renderer, the stage's own path); otherwise
+    ``reference_render`` renders each row — the per-row reference the batch
+    path is tested against.
     """
     n = len(pdf)
     psnr_db = np.full(n, np.nan)
@@ -121,19 +124,13 @@ def _default_render(image_id: str, w: int, h: int) -> np.ndarray:
     return img.make_pixels(image_id, w, h)
 
 
-def verify_payloads(
-    df: DataFrame,
-    reference_render: Callable[[str, int, int], np.ndarray] | None = None,
-) -> DataFrame:
+def verify_payloads(df: DataFrame) -> DataFrame:
     """df columns: image_id, bytes, w, h, fmt, caption, phash,
     expected_caption → VERIFY_DDL rows via mapInPandas (Arrow batches)."""
-    render = reference_render or _default_render
-    batch_render = reference_render is None
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _verify_batch(pdf, render, batch_render=batch_render)
+                yield _verify_batch(pdf, _default_render, batch_render=True)
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
             "expected_caption"]
@@ -164,17 +161,11 @@ def verify_payloads(
 # (idempotent overwrite — the exactly-once story for derived tables).
 
 
-def _batch_table_dir(out_dir: str, name: str, batch_id: int):
-    from pathlib import Path
-    return Path(out_dir) / "tables" / name / f"batch={batch_id}"
-
-
-def verify_committed_batch(spark, out_dir: str, batch_id: int,
-                           reference_render=None) -> None:
+def verify_committed_batch(spark, out_dir: str, batch_id: int) -> None:
     """Recompute + write ``payload_verify/batch=N`` from committed tables."""
     from pyspark.sql import functions as F
-    img_dir = _batch_table_dir(out_dir, "images", batch_id)
-    parsed_dir = _batch_table_dir(out_dir, "parsed_articles", batch_id)
+    img_dir = ST.table_dir(out_dir, "images", batch_id)
+    parsed_dir = ST.table_dir(out_dir, "parsed_articles", batch_id)
     if not img_dir.exists() or not parsed_dir.exists():
         return  # nothing fetched this batch (bootstrap/index-only)
     # background thread: same FAIR pool as the commit writes so the next
@@ -185,29 +176,19 @@ def verify_committed_batch(spark, out_dir: str, batch_id: int,
                         F.col("title").alias("expected_caption")))
     payload = (spark.read.parquet(str(img_dir))
                .join(F.broadcast(captions), "image_id"))
-    out = verify_payloads(payload, reference_render=reference_render)
-    out.write.mode("overwrite").parquet(
-        str(_batch_table_dir(out_dir, "payload_verify", batch_id)))
+    verify_payloads(payload).write.mode("overwrite").parquet(
+        str(ST.table_dir(out_dir, "payload_verify", batch_id)))
 
 
-def repair_missing_verify(spark, out_dir: str, max_batch: int,
-                          reference_render=None) -> list[int]:
+def repair_missing_verify(spark, out_dir: str, max_batch: int) -> list[int]:
     """Resume-time repair: recompute ``payload_verify`` for every committed
     batch whose images dir exists but whose verify dir is missing or was
     interrupted mid-write (no _SUCCESS). Normally at most the one batch
     whose verify was in flight when the run died."""
-    from pathlib import Path
-    base = Path(out_dir) / "tables" / "images"
     repaired = []
-    if not base.exists():
-        return repaired
-    for p in sorted(base.glob("batch=*")):
-        b = int(p.name.split("=")[1])
-        if b > max_batch:
-            continue
-        v = _batch_table_dir(out_dir, "payload_verify", b)
-        if not (v / "_SUCCESS").exists():
-            verify_committed_batch(spark, out_dir, b,
-                                   reference_render=reference_render)
+    for b in ST.table_batches(out_dir, "images"):
+        v = ST.table_dir(out_dir, "payload_verify", b)
+        if b <= max_batch and not (v / "_SUCCESS").exists():
+            verify_committed_batch(spark, out_dir, b)
             repaired.append(b)
     return repaired

@@ -10,7 +10,8 @@ OPTIMIZATION, the join remains the truth). The crawl uses it only under
 ``CrawlConfig.seen_filter='bloom'``; the default is the exact anti-join.
 
 The partitioned Spark dataflow (partition key, rebuild, cogroup update and
-probe, save/load) is operators/seenfilter.py; this module is the
+probe) is operators/seenfilter.py, and the blob table persists as part of
+each committed batch (engine/state.commit_batch); this module is the
 per-partition kernel: one bit array per blob row (bloom_bytes, with its
 n_bits/n_hashes geometry), numpy-vectorized Kirsch-Mitzenmacher double
 hashing from the 64-bit key: bit_i = (h1 + i*h2) mod m.

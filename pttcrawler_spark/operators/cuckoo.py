@@ -1,7 +1,8 @@
 """Partitioned cuckoo filter — the deletable URL-seen variant (north rule).
 
 Same partitioned Spark dataflow as operators/bloom.py (both are
-operators/seenfilter.py), plus DELETE: needed when a URL must be re-crawled
+operators/seenfilter.py, their blob tables committed with each batch by
+engine/state), plus DELETE: needed when a URL must be re-crawled
 (the reference's --upgrade re-fetch, crawler/article.py:152-157 skips only
 when not upgrading). The crawl uses it only under
 ``CrawlConfig.seen_filter='cuckoo'``. This module is the per-partition

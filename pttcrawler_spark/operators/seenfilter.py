@@ -16,30 +16,35 @@ columns:
 - ``_insert(blob, hashes)`` (and ``_delete`` for a deletable filter): the
   updated blob columns; ``_lookup(blob, hashes)``: a maybe-seen bool array.
 
-The kernels read the geometry from the blob row and ``load`` takes the
-partition count from the saved blob table, so a state saved under one
-geometry probes and updates correctly whatever the loading state was
-constructed with; constructor arguments shape only the blobs ``rebuild``
-creates.
+The filter does no I/O: the blob table is one more piece of a batch's
+small state, written by engine/state.commit_batch and read back from the
+committed batch dir (``load_snapshot`` on resume). The kernels read the
+geometry from the blob row and ``restore`` takes the partition count from
+the stored blob table, so a state stored under one geometry probes and
+updates correctly whatever the restoring state was constructed with;
+constructor arguments shape only the blobs ``rebuild`` creates.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 class PartitionedFilter:
-    NAME = ""          # dir under state/batch=N/
+    NAME = ""          # the seen_filter kind; names its blob table's dir
     BLOB_SCHEMA = ""
 
     def __init__(self, partitions: int):
-        self.p = partitions              # load() takes the saved count
+        self.p = partitions              # restore() takes the stored count
         self.blobs: DataFrame | None = None
+
+    def restore(self, blobs: DataFrame) -> None:
+        """Take over a stored blob table, with its partition count."""
+        self.blobs = blobs
+        self.p = blobs.count()           # one blob row per partition
 
     def _keyed(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -98,21 +103,3 @@ class PartitionedFilter:
         )
         return (probed.where(F.col("maybe_seen")).select(*cols),
                 probed.where(~F.col("maybe_seen")).select(*cols))
-
-    # -- persistence (alongside the engine snapshots) -------------------------
-    def _dir(self, out_dir: str, batch_id: int) -> Path:
-        return Path(out_dir) / "state" / f"batch={batch_id}" / self.NAME
-
-    def save(self, out_dir: str, batch_id: int) -> None:
-        d = self._dir(out_dir, batch_id)
-        self.blobs.write.mode("overwrite").parquet(str(d))
-        # re-read: break lineage so blobs don't re-apply every cogroup each batch
-        self.blobs = self.blobs.sparkSession.read.parquet(str(d))
-
-    def load(self, out_dir: str, batch_id: int) -> bool:
-        d = self._dir(out_dir, batch_id)
-        if not d.exists():
-            return False
-        self.blobs = SparkSession.getActiveSession().read.parquet(str(d))
-        self.p = self.blobs.count()      # one blob row per partition
-        return True

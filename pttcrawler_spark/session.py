@@ -20,14 +20,13 @@ ENGINE_CONF: dict[str, str] = {
     # and a store reads back the same whatever the writing JVM's zone
     "spark.sql.session.timeZone": "UTC",
     # FAIR job scheduling: two overlaps remain in the crawl loop. A
-    # batch's frontier/politeness checkpoints (pool "loop",
-    # engine/crawl.py) run beside its own commit writes (pool "commit",
-    # engine/state.py), and batch k's post-commit verify (pool
-    # "commit", engine/verify.py) runs beside batch k+1's jobs. Under
-    # FIFO the checkpoints and the next batch's jobs would queue behind
-    # the payload writes and the verify. Pools are auto-created on
-    # first use; threads that never set a pool land in "default" and
-    # see plain FIFO behavior.
+    # batch's frontier checkpoint (pool "loop", engine/crawl.py) runs
+    # beside its own commit writes (pool "commit", engine/state.py), and
+    # batch k's post-commit verify (pool "commit", engine/verify.py) runs
+    # beside batch k+1's jobs. Under FIFO the checkpoint and the next
+    # batch's jobs would queue behind the payload writes and the verify.
+    # Pools are auto-created on first use; threads that never set a pool
+    # land in "default" and see plain FIFO behavior.
     "spark.scheduler.mode": "FAIR",
     # Arrow for the pandas-UDF stages
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -33,6 +33,9 @@ DEFAULT_HEADERS = {
 
 FETCH_COLS_DDL = ", ".join(
     [f"{c} {t}" for c, t in PAGE_COLS] + ["http_status int", "fetch_error string"])
+# pandas dtype of an all-NULL page column by its Spark type; Arrow casts an
+# object column of None to any other type
+_NULL_DTYPES = {"int": "Int32", "long": "Int64"}
 
 
 def fetch_http(admitted: DataFrame, timeout: float = 10.0,
@@ -73,14 +76,10 @@ def fetch_http(admitted: DataFrame, timeout: float = 10.0,
                     bodies.append(None)
                     statuses.append(-1)
                     errors.append(str(e)[:200])
-            out = pdf.copy()
+            out = pdf.assign(**{
+                c: pd.array([None] * len(pdf), dtype=_NULL_DTYPES.get(t, object))
+                for c, t in PAGE_COLS})
             out["_html"] = bodies
-            out["image_bytes"] = None
-            out["w"] = pd.array([None] * len(pdf), dtype="Int32")
-            out["h"] = pd.array([None] * len(pdf), dtype="Int32")
-            out["fmt"] = None
-            out["caption"] = None
-            out["phash"] = pd.array([None] * len(pdf), dtype="Int64")
             out["http_status"] = pd.array(statuses, dtype="Int32")
             out["fetch_error"] = errors
             yield out

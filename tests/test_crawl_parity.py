@@ -156,7 +156,11 @@ def test_lineage_metrics_present(crawled):
 
 
 def test_resume_bit_identical(spark, site_cfg, corpus_pdf, crawled):
-    """Kill after 2 batches → resume → identical tables + frontier."""
+    """Kill after 2 batches → resume → identical tables, frontier and
+    politeness state (the loop reads politeness back from each commit; the
+    resumed run reads batch 1's from its snapshot)."""
+    from pttcrawler_spark.engine import state as ST
+
     corpus = spark.createDataFrame(corpus_pdf)
     out = tempfile.mkdtemp(prefix="crawl_resume_")
     try:
@@ -182,6 +186,11 @@ def test_resume_bit_identical(spark, site_cfg, corpus_pdf, crawled):
         assert fa[["url", "status", "priority", "kind"]].equals(
             fb[["url", "status", "priority", "kind"]])
         assert fa["batch_id"].tolist() == fb["batch_id"].tolist()
+        pa, pb = (ST.load_snapshot(spark, r.out_dir).politeness
+                  .select("host", "tokens").toPandas()
+                  .sort_values("host").reset_index(drop=True)
+                  for r in (res2, full))
+        assert len(pa) > 0 and pa.equals(pb)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -98,3 +98,20 @@ def test_http_fetch_failure_rows(spark, served_site):
     assert out["_html"].isna().all()
     assert out["http_status"].iloc[0] == 404
     assert out["fetch_error"].iloc[0] == "http 404"
+
+
+def test_http_fetch_nulls_follow_page_cols(spark, served_site, monkeypatch):
+    """The HTTP frame takes its NULL page columns from ``crawl.PAGE_COLS``:
+    a column added to that contract, whatever its Spark type, needs no
+    change in the fetch."""
+    cfg, pdf, port = served_site
+    cols = C.PAGE_COLS + [("x_double", "double"), ("x_bool", "boolean"),
+                          ("x_array", "array<string>")]
+    monkeypatch.setattr(H, "PAGE_COLS", cols)
+    monkeypatch.setattr(H, "FETCH_COLS_DDL", ", ".join(
+        [f"{c} {t}" for c, t in cols] + ["http_status int", "fetch_error string"]))
+    admitted = spark.createDataFrame([(cfg.seeds()[0][1],)], "url string")
+    out = H.fetch_http(admitted, timeout=5.0,
+                       url_rewrite=_rewrite(port)).toPandas()
+    assert len(out) == 1 and out["_html"].notna().all()
+    assert out[[c for c, _ in cols if c != "_html"]].isna().all().all()

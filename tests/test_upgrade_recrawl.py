@@ -121,8 +121,7 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
         victims_pdf = (res.frontier().where("kind = 'article'")
                        .select("url", "url_hash").limit(3).toPandas())
         victims = victims_pdf.url.tolist()
-        n = C.purge_urls(spark, out, victims,
-                         C.CrawlConfig(seen_filter="cuckoo"))
+        n = C.purge_urls(spark, out, victims)
         assert n == 3
 
         # purged rows are gone from the frontier and the seen filter
@@ -131,8 +130,9 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
         snap = ST.load_snapshot(spark, out)
         assert snap.frontier.count() == n_before - 3
         assert snap.frontier.where(F.col("url").isin(victims)).count() == 0
+        assert snap.seen[0] == "cuckoo"
         ck = CK.CuckooState(4)
-        assert ck.load(out, snap.batch_id)
+        ck.restore(snap.seen[1])
         # probe with the PRE-purge rows (the post-purge frontier no longer
         # contains them — that's the point)
         probe_rows = spark.createDataFrame(victims_pdf)
@@ -143,8 +143,7 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
         # because their index page is marked for recrawl
         idx_urls = (res.frontier().where("kind = 'index'").select("url")
                     .toPandas().url.tolist())
-        C.mark_for_recrawl(spark, out, idx_urls,
-                           C.CrawlConfig(seen_filter="cuckoo"))
+        C.mark_for_recrawl(spark, out, idx_urls)
         res3 = _crawl(spark, corpus, cfg, out, resume=True,
                       seen_filter="cuckoo")
         fr = res3.frontier().where(F.col("url").isin(victims))
@@ -155,22 +154,17 @@ def test_purge_with_cuckoo_allows_rediscovery(spark, small):
 
 
 def test_unknown_seen_filter_raises_everywhere(spark, small):
-    """A mistyped seen_filter fails loudly in every flow that maintains the
-    filter, before anything is committed."""
+    """A mistyped seen_filter fails loudly before anything is committed.
+    crawl is the only flow that takes the kind: mark_for_recrawl and
+    purge_urls maintain the filter the store already keeps."""
     from pttcrawler_spark.engine import state as ST
     cfg, pdf, corpus = small
     out = tempfile.mkdtemp(prefix="crawl_badfilter_")
     try:
         _crawl(spark, corpus, cfg, out)
         committed = ST.latest_committed(out)
-        bad = C.CrawlConfig(seen_filter="cukoo")
-        url = cfg.base_url(cfg.board_name(0))
         with pytest.raises(ValueError, match="unknown seen_filter"):
             _crawl(spark, corpus, cfg, out, resume=True, seen_filter="cukoo")
-        with pytest.raises(ValueError, match="unknown seen_filter"):
-            C.mark_for_recrawl(spark, out, [url], bad)
-        with pytest.raises(ValueError, match="unknown seen_filter"):
-            C.purge_urls(spark, out, [url], bad)
         assert ST.latest_committed(out) == committed
     finally:
         shutil.rmtree(out, ignore_errors=True)
