@@ -9,6 +9,7 @@ micro-batch drain over a frontier table:
           → bootstrap: getLastPage → seed index rows L..1     (F1)
           → index: parse entries → canonicalize → ANTI-JOIN dedupe → enqueue
           → article: parse fields/pushes/payload → append output tables
+          → one per-host tally → politeness spend + lineage metrics
           → frontier/politeness/metrics snapshot (engine/state)
 
 The kind counts are the batch's first job, and they decide what the rest
@@ -254,13 +255,34 @@ def _seen_filter(kind: str):
     return None
 
 
-def _init_politeness(hosts: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    return hosts.select("host").distinct().select(
-        "host", F.lit(float(cfg.burst)).alias("tokens"),
-        F.lit(0).cast("long").alias("last_refill_seq"),
-        F.lit(float(cfg.delay_s)).alias("delay_s"),
-        F.lit(None).cast("string").alias("robots_rules"),
-        F.lit(None).cast("long").alias("robots_fetched_seq"))
+# the per-host tally's tags, one count column each
+_TALLY = ("admitted", "deferred", "fetched", "failed", "cand", "new")
+
+
+def _tally(*parts: tuple[DataFrame, F.Column]) -> DataFrame:
+    """A batch's per-host numbers from ONE aggregation: each (frame, tag)
+    part is projected to (host, host_salt, _k), the parts are unioned and
+    every tag of ``_TALLY`` counts into its own column (``count_if``, not
+    ``pivot``, which Spark plans as two aggregations). It groups by host
+    alone (host_salt, a function of host, rides as ``any_value``), so the
+    politeness join on host reuses its shuffle. Not persisted: each of its
+    two writes (politeness, metrics) recomputes it from the batch's cached
+    frames, which costs fewer jobs than materializing it."""
+    tagged = [df.select("host", "host_salt", k.alias("_k")) for df, k in parts]
+    return (functools.reduce(DataFrame.unionByName, tagged)
+            .groupBy("host")
+            .agg(F.any_value("host_salt").alias("host_salt"),
+                 *[F.count_if(F.col("_k") == k).alias(k) for k in _TALLY]))
+
+
+def _stamp(df: DataFrame, batch_id: int,
+           status: F.Column | None = None) -> DataFrame:
+    """``df``'s frontier columns as rows changed in batch ``batch_id``,
+    with ``status`` when given (replaced in place: column order holds)."""
+    cols = {"batch_id": F.lit(batch_id).cast("long")}
+    if status is not None:
+        cols["status"] = status
+    return df.withColumns(cols).select(*FRONTIER_COLS)
 
 
 def _index_entries(ok: DataFrame) -> DataFrame:
@@ -499,7 +521,8 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
             V.repair_missing_verify(spark, out_dir, batch_id)
     else:
         frontier = seed_frontier(spark, seeds)
-        politeness = _init_politeness(frontier, cfg)
+        politeness = POL.spend(None, _tally((frontier, F.lit("new"))),
+                               cfg.burst, cfg.delay_s)
         batch_id = -1
 
     if bloom is not None:
@@ -550,9 +573,10 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
                                   max_budget=math.ceil(cfg.burst))
 
         # marked is read by MANY consumers per batch (admitted → fetch join,
-        # deferred → metrics/cancel, politeness spend, delta) — persist the
-        # narrow frame so the per-host admit window computes once, not once
-        # per consuming job
+        # admitted/deferred → the tally under the politeness and metrics
+        # writes, deferred → early-stop cancel) — persist the narrow frame
+        # so the per-host admit window computes once, not once per
+        # consuming job
         marked = marked.persist()
         admitted = marked.where(F.col("admit")).drop("admit")
         fetched = fetch(admitted).persist(_HEAVY_CACHE)
@@ -619,26 +643,17 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
         ph.mark("parse articles (single-pass)")
 
         # --- frontier DELTA (merge-on-read): O(changes) rows, not O(|frontier|)
-        status_override = [
-            F.when(F.col("_html").isNotNull(), F.lit("fetched"))
-            .otherwise(F.lit("failed")).alias("status")
-            if c == "status" else
-            F.lit(batch_id).cast("long").alias("batch_id")
-            if c == "batch_id" else c
-            for c in FRONTIER_COLS
-        ]
-        changed = fetched.select(*status_override)
+        changed = _stamp(fetched, batch_id, F.when(
+            F.col("_html").isNotNull(), F.lit("fetched")).otherwise(F.lit("failed")))
         if blocked is not None:
-            changed = changed.unionByName(blocked.select(
-                *[F.lit("failed").alias("status") if c == "status" else
-                  F.lit(batch_id).cast("long").alias("batch_id")
-                  if c == "batch_id" else c for c in FRONTIER_COLS]))
+            changed = changed.unionByName(
+                _stamp(blocked, batch_id, F.lit("failed")))
         delta = changed
         if new_rows is not None:
-            delta_new = new_rows.withColumn("batch_id", F.lit(batch_id).cast("long"))
+            delta_new = _stamp(new_rows, batch_id)
             if stop_pages is not None:
                 delta_new = _cancel(delta_new, stop_pages)
-            delta = delta.unionByName(delta_new.select(*FRONTIER_COLS))
+            delta = delta.unionByName(delta_new)
         if stop_pages is not None:
             # early stop also cancels this board's older deferred rows
             cancelled_old = (
@@ -654,38 +669,23 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
             .unionByName(delta)
         )
 
-        n_admitted = admitted.groupBy("host").agg(F.count("*").alias("n_admitted"))
-        politeness_next = POL.spend(politeness, n_admitted)
-        deferred = marked.where(~F.col("admit")).groupBy("host").agg(
-            F.count("*").alias("_deferred"))
-        metrics = (
-            changed.groupBy("host", "host_salt")
-            .agg(
-                F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("fetched"),
-                F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-            )
-            .join(deferred, "host", "left")
-        )
-        deduped = F.lit(0)
+        # the batch's per-host numbers: admitted/deferred from the admit,
+        # fetched/failed (robots-blocked rows included) from the status
+        # change, and on discovery batches the candidates and the new rows
+        parts = [(marked, F.when(F.col("admit"), F.lit("admitted"))
+                  .otherwise(F.lit("deferred"))),
+                 (changed, F.col("status"))]
         if new_rows is not None:
-            # newly seen hosts join with a full bucket, one row per host
-            politeness_next = politeness_next.unionByName(_init_politeness(
-                new_rows.join(politeness.select("host"), "host", "left_anti"), cfg))
-            # per-partition lineage: deduped = discovered-this-batch minus
-            # actually-new, PER HOST (north rule: per-partition lineage/metrics)
-            metrics = (
-                metrics
-                .join(pre_anti.groupBy("host").agg(F.count("*").alias("_cand")),
-                      "host", "left")
-                .join(new_rows.groupBy("host").agg(F.count("*").alias("_new")),
-                      "host", "left"))
-            deduped = (F.coalesce(F.col("_cand"), F.lit(0))
-                       - F.coalesce(F.col("_new"), F.lit(0)))
-        metrics = metrics.select(
+            parts += [(pre_anti, F.lit("cand")), (new_rows, F.lit("new"))]
+        tally = _tally(*parts)
+        # spend the admitted tokens; each newly seen host opens a bucket
+        politeness_next = POL.spend(politeness, tally, cfg.burst, cfg.delay_s)
+        # per-partition lineage (north rule): a row per host whose status
+        # changed, deduped = discovered-this-batch minus actually-new
+        metrics = tally.where(F.col("fetched") + F.col("failed") > 0).select(
             F.lit(batch_id).cast("long").alias("batch_id"),
             F.col("host_salt").alias("partition_id"), "host", "fetched",
-            deduped.cast("long").alias("deduped"),
-            F.coalesce(F.col("_deferred"), F.lit(0)).cast("long").alias("deferred"),
+            (F.col("cand") - F.col("new")).alias("deduped"), "deferred",
             "failed")
 
         if bloom is not None and new_rows is not None:
@@ -772,6 +772,24 @@ def _crawl_impl(spark: SparkSession, fetch, seeds: list[tuple[str, str]],
                        batch_stats=batch_stats)
 
 
+def _edit_snapshot(spark: SparkSession, out_dir: str, urls, key: str,
+                   edit) -> int:
+    """Commit the latest snapshot's frontier as edited by ``edit(snap,
+    urls)`` → (next frontier, rows touched, seen-filter state) as the next
+    batch, with the snapshot's politeness and the rows touched under
+    ``key`` in its marker. ``urls``: a DataFrame with a ``url`` column or a
+    list of url strings, taken distinct. Returns the rows touched."""
+    if not isinstance(urls, DataFrame):
+        urls = spark.createDataFrame([(u,) for u in urls], "url string")
+    snap = ST.load_snapshot(spark, out_dir)
+    if snap is None:
+        raise ValueError(f"no committed snapshot under {out_dir}")
+    frontier_next, n, seen = edit(snap, urls.select("url").distinct())
+    ST.commit_batch(out_dir, snap.batch_id + 1, frontier_next, snap.politeness,
+                    extra={key: n}, seen=seen)
+    return n
+
+
 def mark_for_recrawl(spark: SparkSession, out_dir: str, urls) -> int:
     """--upgrade analog (crawler/article.py:152-157: the seen-skip applies
     only when NOT upgrading): flip the given fetched URLs back to pending in
@@ -787,26 +805,20 @@ def mark_for_recrawl(spark: SparkSession, out_dir: str, urls) -> int:
     ``urls``: DataFrame with a ``url`` column (or list of url strings).
     Returns the number of frontier rows flipped.
     """
-    if not isinstance(urls, DataFrame):
-        urls = spark.createDataFrame([(u,) for u in urls], "url string")
-    snap = ST.load_snapshot(spark, out_dir)
-    if snap is None:
-        raise ValueError(f"no committed snapshot under {out_dir}")
-    urls = urls.select("url").distinct()
-    n = (snap.frontier.join(urls, "url", "left_semi")
-         .where(F.col("status") == "fetched").count())
-    frontier_next = (
-        snap.frontier.join(urls.withColumn("_re", F.lit(True)), "url", "left")
-        .withColumn(
-            "status",
-            F.when(F.col("_re") & (F.col("status") == "fetched"), F.lit("pending"))
-            .otherwise(F.col("status")))
-        .drop("_re")
-    )
-    # carry the seen-filter blobs forward so the new snapshot is complete
-    ST.commit_batch(out_dir, snap.batch_id + 1, frontier_next, snap.politeness,
-                    extra={"recrawl_marked": n}, seen=snap.seen)
-    return n
+    def edit(snap: ST.Snapshot, urls: DataFrame):
+        n = (snap.frontier.join(urls, "url", "left_semi")
+             .where(F.col("status") == "fetched").count())
+        frontier_next = (
+            snap.frontier.join(urls.withColumn("_re", F.lit(True)), "url", "left")
+            .withColumn(
+                "status",
+                F.when(F.col("_re") & (F.col("status") == "fetched"), F.lit("pending"))
+                .otherwise(F.col("status")))
+            .drop("_re")
+        )
+        # carry the seen-filter blobs forward so the new snapshot is complete
+        return frontier_next, n, snap.seen
+    return _edit_snapshot(spark, out_dir, urls, "recrawl_marked", edit)
 
 
 def purge_urls(spark: SparkSession, out_dir: str, urls) -> int:
@@ -816,26 +828,19 @@ def purge_urls(spark: SparkSession, out_dir: str, urls) -> int:
     the filter from the surviving frontier — correct but a full pass).
     Purged URLs CAN later be re-discovered and re-crawled as brand-new
     frontier rows. Returns the number of rows deleted."""
-    if not isinstance(urls, DataFrame):
-        urls = spark.createDataFrame([(u,) for u in urls], "url string")
-    snap = ST.load_snapshot(spark, out_dir)
-    if snap is None:
-        raise ValueError(f"no committed snapshot under {out_dir}")
-    urls = urls.select("url").distinct()
-    doomed = snap.frontier.join(urls, "url", "left_semi")
-    n = doomed.count()
-    frontier_next = snap.frontier.join(urls, "url", "left_anti")
-    seen = snap.seen
-    if seen is not None:             # the store's own filter kind
-        kind, blobs = seen
-        filt = _seen_filter(kind)
-        if kind == "cuckoo":
-            filt.restore(blobs)
-            filt.remove(doomed.select("url_hash"))
-        else:
-            filt.rebuild(frontier_next.select("url_hash"))
-        seen = (kind, filt.blobs)
-    ST.commit_batch(out_dir, snap.batch_id + 1, frontier_next, snap.politeness,
-                    extra={"purged": n}, seen=seen)
-    return n
-
+    def edit(snap: ST.Snapshot, urls: DataFrame):
+        doomed = snap.frontier.join(urls, "url", "left_semi")
+        n = doomed.count()
+        frontier_next = snap.frontier.join(urls, "url", "left_anti")
+        seen = snap.seen
+        if seen is not None:             # the store's own filter kind
+            kind, blobs = seen
+            filt = _seen_filter(kind)
+            if kind == "cuckoo":
+                filt.restore(blobs)
+                filt.remove(doomed.select("url_hash"))
+            else:
+                filt.rebuild(frontier_next.select("url_hash"))
+            seen = (kind, filt.blobs)
+        return frontier_next, n, seen
+    return _edit_snapshot(spark, out_dir, urls, "purged", edit)

@@ -16,6 +16,11 @@ the URL path, all Catalyst), then ``admit_window`` ranks the rest per host
 with a window, joins the state table and admits rank <= floor(tokens).
 Blocked rows never reach the rank window, so they spend no tokens.
 
+``spend`` closes the batch: one full outer join of the state with the
+batch's per-host tally (engine/crawl) spends each host's admitted tokens
+and opens a full bucket for each host the batch discovered — the one place
+a bucket is born, the seed hosts' included.
+
 ``admit_apply_in_pandas`` is the same token bucket as a
 groupBy(host).applyInPandas operator (the north-rule shape, graded by the
 suite's ``p9`` keys); tests pin its admit bits to ``admit_window``'s.
@@ -225,10 +230,26 @@ def admit_apply_in_pandas(pending: DataFrame, state: DataFrame,
     )
 
 
-def spend(state: DataFrame, admitted_counts: DataFrame) -> DataFrame:
-    """tokens ← tokens − admitted(host); admitted_counts: (host, n_admitted)."""
+def spend(state: DataFrame | None, tally: DataFrame, burst: float,
+          delay_s: float) -> DataFrame:
+    """The next politeness state from the batch's per-host ``tally``
+    (host, admitted, new): a host with a state row spends its admitted
+    tokens, tokens ← tokens − admitted; a host without one that has
+    ``new`` URLs opens a full bucket (``burst`` tokens, ``delay_s``, no
+    robots fetch yet). ONE full outer join on host does both; ``state``
+    None (the seed) opens a bucket for every host with new URLs."""
+    fresh = {"tokens": F.lit(float(burst)), "last_refill_seq": F.lit(0).cast("long"),
+             "delay_s": F.lit(float(delay_s)), "robots_rules": F.lit(None).cast("string"),
+             "robots_fetched_seq": F.lit(None).cast("long")}
+    new = F.col("new") > 0
+    if state is None:
+        return tally.where(new).select("host", *[v.alias(c) for c, v in fresh.items()])
+    known = F.col("_known").isNotNull()
+    spent = F.col("tokens") - F.coalesce(F.col("admitted"), F.lit(0)).cast("double")
     return (
-        state.join(admitted_counts, "host", "left")
-        .withColumn("tokens", F.col("tokens") - F.coalesce(F.col("n_admitted"), F.lit(0)).cast("double"))
-        .drop("n_admitted")
-    )
+        state.withColumn("_known", F.lit(True))
+        .join(tally.select("host", "admitted", "new"), "host", "full")
+        .where(known | new)
+        .select("host", *[
+            F.when(known, spent if c == "tokens" else F.col(c)).otherwise(v).alias(c)
+            for c, v in fresh.items()]))

@@ -149,7 +149,7 @@ def test_article_index_upsert_semantics(crawled, oracle):
 
 def test_lineage_metrics_present(crawled):
     m = crawled.metrics().toPandas()
-    assert m.fetched.sum() == 35  # 2 bootstraps + 8 index pages(incl alias) + 27 articles... total events
+    assert m.fetched.sum() == 35  # 2 bootstraps + 6 index pages + 27 articles
     assert (m.failed == 0).all()
     assert set(m.columns) >= {"batch_id", "partition_id", "host", "fetched",
                               "deduped", "deferred", "failed"}
